@@ -56,14 +56,12 @@ def check_index(out_dir: str, manifest: dict) -> list:
 def check_reindex(stats: dict, manifest: dict) -> list:
     """Solr mock counters: the accepted docs are exactly the generated
     docs minus the poison docs, and each poison doc was skipped once
-    (rejected as a single-doc POST)."""
-    poison = len(manifest["poison_ids"])
+    (rejected as a single-doc POST). How the writer batches and recovers
+    is not checked: the POST counts are per-layer metrics."""
     expect = {
         "accepted_docs": manifest["accepted_docs"],
         "accepted_digest": manifest["accepted_digest"],
-        "rejected_single_posts": poison,
-        "batch_posts": manifest["batch_posts"],
-        "single_posts": manifest["single_posts"],
+        "rejected_single_posts": len(manifest["poison_ids"]),
     }
     return [
         f"{k}: {stats.get(k)!r} != {v!r}"

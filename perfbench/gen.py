@@ -26,7 +26,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 #: bump whenever the generated bytes change for a given seed
-GEN_VERSION = 4
+GEN_VERSION = 5
 
 WORKLOADS = ("index_iso2709_ndjson", "reindex_parquet_solr", "curate_corpus")
 
@@ -297,7 +297,6 @@ def gen_reindex(rng: random.Random, out: str) -> dict:
     }
     per_file = REINDEX_DOCS // REINDEX_FILES
     batches = per_file // SOLR_BATCH
-    n_poison = REINDEX_FILES * POISON_PER_FILE
     poison_idx = {
         f * per_file + b * SOLR_BATCH + rng.randrange(SOLR_BATCH)
         for f in range(REINDEX_FILES)
@@ -323,8 +322,6 @@ def gen_reindex(rng: random.Random, out: str) -> dict:
         "poison_ids": poison_ids,
         "accepted_docs": len(good),
         "accepted_digest": id_set_digest(good),
-        "batch_posts": REINDEX_DOCS // SOLR_BATCH,
-        "single_posts": SOLR_BATCH * n_poison,
     }
 
 
@@ -405,10 +402,21 @@ def gen_curate(rng: random.Random, out: str) -> dict:
     n_near_src = len(base) // 25
     for i in near_pool[:n_near_src]:
         size = rng.choice([1, 1, 1, 1, 2, 2, 3, 5])
-        for _ in range(size):
+        copies: list = []
+        while len(copies) < size:
+            # each edit replaces a token with another word at a position
+            # no other edit touches, so a copy always differs from its
+            # base; a copy equal to an earlier one is drawn again. Either
+            # would be an exact duplicate, which exact dedup drops.
             toks = list(base[i])
-            for _ in range(max(1, len(toks) // 45)):
-                toks[rng.randrange(len(toks))] = rng.choice(VOCAB)
+            for at in rng.sample(range(len(toks)), max(1, len(toks) // 45)):
+                word = toks[at]
+                while word == toks[at]:
+                    word = rng.choice(VOCAB)
+                toks[at] = word
+            if toks not in copies:
+                copies.append(toks)
+        for toks in copies:
             docs.append((" ".join(toks), "near_copy", i))
             near_pairs_src.append(i)
     for _ in range(len(base) // 200):

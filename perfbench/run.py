@@ -14,6 +14,7 @@ under ``.perfbench_work/`` in the checkout.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import shutil
@@ -29,16 +30,8 @@ sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
 import session  # noqa: E402
-from tracing import RssSampler, StatusStore, Tracer  # noqa: E402
+from tracing import MemorySampler, StatusStore, Tracer  # noqa: E402
 
-#: set-up samples per run: this many fresh processes, one after another
-#: before the run's own set-up, plus the run's own. Two samples, not more:
-#: each costs a JVM start (~8 s), and a full benchmark pass (22 runs per
-#: workload) must fit in under an hour
-SETUP_PROBES = 1
-#: workloads whose layers a traced run of another workload also times
-#: (curate_corpus has no end-to-end runs of its own in BENCHMARK.json)
-TRACE_ALSO = {"reindex_parquet_solr": ["curate_corpus"]}
 #: generated inputs kept per workload (older seeds are deleted)
 INPUT_CACHE_KEEP = 3
 
@@ -49,10 +42,13 @@ def fail(msg: str) -> None:
 
 
 def inputs_for(workload: str, seed: int) -> tuple:
-    """Generated inputs of (workload, seed), cached by generator version;
-    the generator runs in its own process. -> (dir, manifest)."""
+    """Generated inputs of (workload, seed), cached by generator version
+    and the generator's source (which also writes the manifest the checks
+    read); the generator runs in its own process. -> (dir, manifest)."""
     cache = os.path.join(WORK, "inputs")
-    key = f"{workload}-s{seed}-v{gen.GEN_VERSION}"
+    with open(gen.__file__, "rb") as fh:
+        source = hashlib.sha256(fh.read()).hexdigest()[:12]
+    key = f"{workload}-s{seed}-v{gen.GEN_VERSION}-{source}"
     path = os.path.join(cache, key)
     manifest = os.path.join(path, "manifest.json")
     if not os.path.exists(manifest):
@@ -76,35 +72,31 @@ def inputs_for(workload: str, seed: int) -> tuple:
         return path, json.load(fh)
 
 
-def probe_setups(n: int) -> list:
-    """Set-up seconds of ``n`` fresh processes, one after another."""
-    out = []
-    for _ in range(n):
-        res = subprocess.run(
-            [sys.executable, os.path.join(HERE, "session.py"), "--probe", WORK],
-            check=True, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-            text=True, timeout=120,
-        )
-        line = [ln for ln in res.stdout.splitlines() if ln.startswith("SETUP ")]
-        if not line:
-            raise RuntimeError("set-up probe printed no SETUP line")
-        out.append(float(line[-1].split()[1]))
-    return out
+def probe_setup() -> float:
+    """Set-up seconds of a fresh process."""
+    res = subprocess.run(
+        [sys.executable, os.path.join(HERE, "session.py"), "--probe", WORK],
+        check=True, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+        text=True, timeout=120,
+    )
+    line = [ln for ln in res.stdout.splitlines() if ln.startswith("SETUP ")]
+    if not line:
+        raise RuntimeError("set-up probe printed no SETUP line")
+    return float(line[-1].split()[1])
 
 
-def timed_window(wl, seconds: float, sampler) -> dict:
-    """Closed loop: run, check, repeat until ``seconds`` have passed."""
+def timed_window(wl, seconds: float, memory) -> dict:
+    """Closed loop: run, check, repeat until ``seconds`` have passed.
+    Each run starts from the live heap (untimed full collection)."""
     times, failed = [], 0
     t_end = time.perf_counter() + seconds
     while True:
-        sampler.active = True
+        memory.collect()
         try:
             secs = wl.run()
         except Exception as e:  # a failed run counts against error rate
             print(f"perfbench: run failed: {e!r}", file=sys.stderr)
             secs = None
-        finally:
-            sampler.active = False
         problems = wl.check() if secs is not None else ["run raised"]
         if problems:
             failed += 1
@@ -138,7 +130,10 @@ def main(argv=None) -> int:
     os.makedirs(work)
     session.prepare_env(WORK)
 
-    setups = [] if args.trace else probe_setups(SETUP_PROBES)
+    # two set-up samples, one fresh process and this run's own: each costs
+    # a JVM start (~8 s), and a full benchmark pass (22 runs per workload)
+    # must fit in under an hour
+    setups = [] if args.trace else [probe_setup()]
     spark, own_setup = session.start(WORK)
     setups.append(own_setup)
     from workloads import WORKLOADS
@@ -153,37 +148,44 @@ def main(argv=None) -> int:
     try:
         wl.start()
         tracer = Tracer()
-        with RssSampler(session.jvm_pid(spark), interval=0.25) as sampler:
-            with tracer.span("cold_run"):
-                t0 = time.perf_counter()
-                try:
-                    wl.run()
-                    cold_problems = wl.check()
-                except Exception as e:  # reported as incorrect, not a crash
-                    cold_problems = [f"cold run raised {e!r}"]
-                cold = time.perf_counter() - t0
-            t_warm = time.perf_counter() + wl.warm_seconds
-            while time.perf_counter() < t_warm:
-                wl.warm()
-            window = timed_window(wl, args.seconds, sampler)
-            if args.trace:
-                store = StatusStore(spark)
-                layer = {}
-                with tracer.span("traced"):
-                    wl.trace(tracer, store, layer)
-                    for other in TRACE_ALSO.get(args.workload, []):
-                        o_inputs, o_manifest = inputs_for(other, args.seed)
-                        artifact[f"input_digest.{other}"] = o_manifest["digest"]
-                        o_wl = WORKLOADS[other](spark, o_inputs, o_manifest, work)
-                        o_wl.run()  # untraced warm-up, like the cold run
-                        with tracer.span(other):
-                            o_wl.trace(tracer, store, layer)
+        with tracer.span("cold_run"):
+            t0 = time.perf_counter()
+            try:
+                wl.run()
+                cold_problems = wl.check()
+            except Exception as e:  # reported as incorrect, not a crash
+                cold_problems = [f"cold run raised {e!r}"]
+            cold = time.perf_counter() - t0
+        t_warm = time.perf_counter() + wl.warm_seconds
+        while time.perf_counter() < t_warm:
+            wl.run()
+        mock = [wl.mock.pid] if wl.mock else []
+        with MemorySampler(spark, session.heap_gb(), exclude=mock) as memory:
+            window = timed_window(wl, args.seconds, memory)
+        if args.trace:
+            store = StatusStore(spark)
+            layer = {}
+            with tracer.span("traced"):
+                wl.trace(tracer, store, layer)
+                if args.workload == "reindex_parquet_solr":
+                    # curate_corpus has no end-to-end runs in BENCHMARK.json:
+                    # its layers are timed here, on inputs of the same seed
+                    c_inputs, c_manifest = inputs_for("curate_corpus", args.seed)
+                    artifact["input_digest.curate_corpus"] = c_manifest["digest"]
+                    curate = WORKLOADS["curate_corpus"](
+                        spark, c_inputs, c_manifest, work)
+                    curate.run()  # untraced warm-up, like the cold run
+                    with tracer.span("curate_corpus"):
+                        curate.trace(tracer, store, layer)
         times = window["times"]
         # no successful run: throughput reads 0 and the result is incorrect
         median = statistics.median(times) if times else float("inf")
         artifact.update(cold_run_s=cold, cold_problems=cold_problems,
                         run_s=times, attempted=window["attempted"],
-                        failed=window["failed"], peak_rss_mb=sampler.peak_mb)
+                        failed=window["failed"], peak_rss_mb=memory.peak_mb,
+                        heap_peak_mb=memory.heap_peak_mb,
+                        heap_pool_peaks_mb=memory.pool_peaks_mb,
+                        off_heap_peak_mb=memory.off_heap_peak_mb)
         if args.trace:
             layer["cli.cold_run_s"] = cold if "cli.run_s" in layer else 0.0
             traced = layer["cli.run_s"] if "cli.run_s" in layer else layer["corpus.curate_s"]
@@ -199,7 +201,7 @@ def main(argv=None) -> int:
             values = {
                 "records_per_s": manifest["records"] / median,
                 "setup_s": statistics.median(setups),
-                "peak_rss_mb": sampler.peak_mb,
+                "peak_rss_mb": memory.peak_mb,
                 "ok_rate": ok / window["attempted"],
             }
             metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]}

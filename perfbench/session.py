@@ -27,15 +27,19 @@ def host() -> dict:
     return {"cpus": cpus, "mem_gb": round(mem_kb / (1 << 20), 1)}
 
 
+def heap_gb() -> int:
+    """The driver's heap in GiB: a quarter of RAM, at most 4."""
+    return max(1, min(4, int(host()["mem_gb"]) // 4))
+
+
 def session_conf(work: str) -> dict:
     """Spark settings of every benchmark session. Sizing comes from the
     host only, so parent and change get identical settings on one box."""
     h = host()
-    heap_gb = max(1, min(4, int(h["mem_gb"]) // 4))
     return {
         "spark.master": f"local[{h['cpus']}]",
         "spark.app.name": "perfbench",
-        "spark.driver.memory": f"{heap_gb}g",
+        "spark.driver.memory": f"{heap_gb()}g",
         "spark.sql.shuffle.partitions": str(4 * h["cpus"]),
         "spark.sql.session.timeZone": "UTC",
         # one task per input file: without this, small files are packed
@@ -49,11 +53,11 @@ def session_conf(work: str) -> dict:
         "spark.ui.retainedStages": "100000",
         "spark.sql.ui.retainedExecutions": "100000",
         "spark.local.dir": os.path.join(work, "spark-local"),
-        # a fixed, pre-touched heap: otherwise peak memory depends on
-        # whether G1 happened to grow the heap, or to cycle through all of
-        # it, before the window ended, and jumped between ~2 and ~4 GB
-        # from run to run
-        "spark.driver.extraJavaOptions": f"-Xms{heap_gb}g -XX:+AlwaysPreTouch"
+        # a fixed heap and young generation: G1 resizes neither, so the
+        # eden size (1.2-1.8 GB at a 3 GB heap) is not chosen afresh in
+        # every process
+        "spark.driver.extraJavaOptions": f"-Xms{heap_gb()}g"
+        f" -Xmn{heap_gb() * 1024 // 3}m"
         " -Djava.io.tmpdir=" + os.path.join(work, "tmp"),
     }
 
@@ -109,10 +113,6 @@ def shutdown(spark) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-
-
-def jvm_pid(spark) -> int:
-    return int(spark._jvm.java.lang.ProcessHandle.current().pid())
 
 
 if __name__ == "__main__":

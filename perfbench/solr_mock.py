@@ -1,15 +1,15 @@
 """A latency-injecting Solr ``/update/json`` mock, run as its own process.
 
-    python3 perfbench/solr_mock.py --delay-ms 10 --workers 4
+    python3 perfbench/solr_mock.py
 
 prints ``PORT <n>`` on its first stdout line, then serves until killed.
 
 - HTTP/1.1 keep-alive, ``TCP_NODELAY`` on every accepted socket.
-- Every POST to ``.../update/json`` sleeps ``--delay-ms`` (the fixed
-  round trip of a remote Solr), then answers 200, or 400 when the batch
-  holds a document whose ``title`` contains ``POISON``.
-- At most ``--workers`` requests are handled at once (a server with that
-  many handler threads); further connections are accepted and their
+- Every POST to ``.../update/json`` sleeps ``DELAY_S`` (the fixed round
+  trip of a remote Solr), then answers 200, or 400 when the batch holds a
+  document whose ``title`` contains ``POISON``.
+- At most one request per usable core is handled at once (a server with
+  that many handler threads); further connections are accepted and their
   requests wait.
 - ``GET /admin/stats`` returns the counters since the last
   ``POST /admin/reset``: batch and single-doc POSTs, accepted docs and an
@@ -21,14 +21,17 @@ prints ``PORT <n>`` on its first stdout line, then serves until killed.
 
 from __future__ import annotations
 
-import argparse
 import hashlib
+import os
 import http.server
 import json
 import socket
 import sys
 import threading
 import time
+
+#: fixed per-POST delay: the round trip of a remote Solr
+DELAY_S = 0.010
 
 
 class Stats:
@@ -92,7 +95,7 @@ def _is_poison(doc: dict) -> bool:
     return any("POISON" in t for t in (title if isinstance(title, list) else [title]))
 
 
-def make_handler(stats: Stats, delay_s: float, workers: threading.Semaphore):
+def make_handler(stats: Stats, workers: threading.Semaphore):
     class Handler(http.server.BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
 
@@ -138,7 +141,7 @@ def make_handler(stats: Stats, delay_s: float, workers: threading.Semaphore):
                 stats.inflight += 1
                 stats.max_inflight = max(stats.max_inflight, stats.inflight)
             with workers:
-                time.sleep(delay_s)
+                time.sleep(DELAY_S)
                 docs = json.loads(payload)
                 ok = not any(_is_poison(d) for d in docs)
                 ids_sum = sum(_id_hash(_doc_id(d)) for d in docs) if ok else 0
@@ -167,14 +170,10 @@ def make_handler(stats: Stats, delay_s: float, workers: threading.Semaphore):
     return Handler
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser(description="latency-injecting Solr mock")
-    ap.add_argument("--delay-ms", type=float, default=10.0)
-    ap.add_argument("--workers", type=int, required=True)
-    args = ap.parse_args(argv)
+def main() -> int:
     stats = Stats()
-    handler = make_handler(stats, args.delay_ms / 1e3,
-                           threading.BoundedSemaphore(args.workers))
+    workers = threading.BoundedSemaphore(len(os.sched_getaffinity(0)))
+    handler = make_handler(stats, workers)
     server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
     server.daemon_threads = True
     print(f"PORT {server.server_address[1]}", flush=True)

@@ -7,6 +7,7 @@ checks, the Solr mock and span self times. No Spark session needed.
 from __future__ import annotations
 
 import json
+import mmap
 import os
 import subprocess
 import sys
@@ -21,7 +22,7 @@ sys.path.insert(0, HERE)
 
 import checks  # noqa: E402
 import gen  # noqa: E402
-from tracing import Tracer  # noqa: E402
+from tracing import Tracer, pss_kb, tree_pss_mb  # noqa: E402
 
 
 @pytest.fixture
@@ -108,8 +109,6 @@ def test_reindex_check_passes_correct_and_fails_corrupted(small, tmp_path):
         "accepted_docs": m["accepted_docs"],
         "accepted_digest": m["accepted_digest"],
         "rejected_single_posts": len(m["poison_ids"]),
-        "batch_posts": m["batch_posts"],
-        "single_posts": m["single_posts"],
     }
     assert checks.check_reindex(good, m) == []
     for key, value in [("accepted_docs", m["accepted_docs"] - 1),
@@ -144,6 +143,23 @@ def test_curate_check_passes_correct_and_fails_corrupted(small, tmp_path):
     assert any("recall" in p for p in checks.check_curate(str(out), m))
 
 
+@pytest.mark.parametrize("seed", range(1, 5))
+def test_planted_exact_dups_are_all_the_normalized_duplicates(small, tmp_path, seed):
+    """Exact dedup drops every doc whose lower-cased, whitespace-collapsed
+    text repeats: the manifest's exact_dups must be exactly those, so no
+    near-dup copy may repeat its base or another copy."""
+    m = gen.generate("curate_corpus", seed, str(tmp_path / "in"))
+    rows = pq.read_table(tmp_path / "in" / "docs").to_pylist()
+    skip = set(m["dropped"]["gated"]) | set(m["dropped"]["contaminated"])
+    groups: dict = {}
+    for r in rows:
+        if r["doc_id"] not in skip:
+            key = " ".join(r["text"].lower().split())
+            groups.setdefault(key, []).append(r["doc_id"])
+    dups = {i for g in groups.values() for i in g if i != min(g)}
+    assert dups == set(m["dropped"]["exact_dups"])
+
+
 def test_near_dup_recall_counts_larger_id_of_each_pair():
     pairs = [[1, 5], [9, 2], [3, 4]]
     assert checks.near_dup_recall({5, 9, 4}, pairs) == 1.0
@@ -163,8 +179,8 @@ def _post(url: str, body: bytes) -> int:
 
 def test_solr_mock_counts_posts_and_rejects_poison():
     proc = subprocess.Popen(
-        [sys.executable, os.path.join(HERE, "solr_mock.py"), "--delay-ms", "1",
-         "--workers", "2"], stdout=subprocess.PIPE, text=True)
+        [sys.executable, os.path.join(HERE, "solr_mock.py")],
+        stdout=subprocess.PIPE, text=True)
     try:
         port = int(proc.stdout.readline().split()[1])
         base = f"http://127.0.0.1:{port}"
@@ -203,3 +219,24 @@ def test_self_time_subtracts_child_spans():
     assert st["a"] == pytest.approx(2.5)
     assert st["b"] == pytest.approx(3.0)
     assert st["c"] == pytest.approx(0.5)
+
+
+def test_pss_leaves_out_heap_sized_mappings_and_excluded_processes():
+    """A touched 64 MiB anonymous block stands in for the Java heap: it
+    counts below the size cut-off and not at or above it."""
+    block = mmap.mmap(-1, 64 << 20)
+    try:
+        block.write(b"x" * (64 << 20))
+        with_block = pss_kb(os.getpid(), 1 << 40)
+        without = pss_kb(os.getpid(), 64 << 10)
+        assert with_block - without >= 60 << 10
+    finally:
+        block.close()
+    child = subprocess.Popen([sys.executable, "-c", "input()"],
+                             stdin=subprocess.PIPE)
+    try:
+        both = tree_pss_mb(os.getpid(), 1 << 40)
+        alone = tree_pss_mb(os.getpid(), 1 << 40, exclude={child.pid})
+        assert both - alone >= 1
+    finally:
+        child.communicate(b"\n", timeout=10)

@@ -22,7 +22,6 @@ import urllib.request
 import pyarrow.parquet as pq
 
 import checks
-from session import host
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 FLAGSHIP_CONFIG = os.path.join(HERE, "configs", "flagship.py")
@@ -61,8 +60,11 @@ class Workload:
     """One workload over one generated input directory."""
 
     name = ""
-    #: seconds of ``warm()`` calls between the cold run and the window
+    #: seconds of untimed runs between the cold run and the window
     warm_seconds = 0.0
+    #: a process standing in for a remote server (the Solr mock); its
+    #: memory is not the program's
+    mock = None
 
     def __init__(self, spark, inputs: str, manifest: dict, work: str):
         self.spark, self.inputs, self.manifest, self.work = (
@@ -77,9 +79,6 @@ class Workload:
     def run(self) -> float:
         """One closed-loop run; -> wall seconds. Raises on failure."""
         raise NotImplementedError
-
-    def warm(self) -> None:
-        """One untimed warm-up run."""
 
     def check(self) -> list:
         raise NotImplementedError
@@ -154,9 +153,8 @@ class IndexIso2709Ndjson(Workload):
     """UTF-8 ISO-2709 files -> 12-rule flagship config -> NDJSON dir."""
 
     name = "index_iso2709_ndjson"
-    # run times fall for many runs after the cold one: the driver-side
-    # build of the 12-rule plan is still being JIT-compiled. Runs over one
-    # input file warm that path at a fraction of a full run's cost.
+    # run times fall for several runs after the cold one: the driver-side
+    # build of the 12-rule plan is still being JIT-compiled
     warm_seconds = 6.0
 
     def __init__(self, *a):
@@ -164,16 +162,9 @@ class IndexIso2709Ndjson(Workload):
         self.files = sorted(glob.glob(os.path.join(self.inputs, "mrc", "*.mrc")))
         self.out = os.path.join(self.work, "out_ndjson")
 
-    def argv(self, files=None) -> list:
+    def argv(self) -> list:
         return ["-c", FLAGSHIP_CONFIG, "-o", self.out,
-                "--master", self.spark.sparkContext.master,
-                *(files or self.files)]
-
-    def warm(self) -> None:
-        from traject_spark import cli
-
-        _fresh(self.out)
-        cli.main(self.argv(self.files[:1]), spark=self.spark)
+                "--master", self.spark.sparkContext.master, *self.files]
 
     def run(self) -> float:
         from traject_spark import cli
@@ -236,13 +227,11 @@ class ReindexParquetSolr(Workload):
     def __init__(self, *a):
         super().__init__(*a)
         self.parquet = os.path.join(self.inputs, "parquet")
-        self.mock = None
         self.url = None
 
     def start(self) -> None:
         self.mock = subprocess.Popen(
-            [sys.executable, os.path.join(HERE, "solr_mock.py"),
-             "--delay-ms", "10", "--workers", str(host()["cpus"])],
+            [sys.executable, os.path.join(HERE, "solr_mock.py")],
             stdout=subprocess.PIPE, text=True,
         )
         line = self.mock.stdout.readline()
@@ -269,20 +258,14 @@ class ReindexParquetSolr(Workload):
         with urllib.request.urlopen(req, timeout=10) as resp:
             return json.loads(resp.read())
 
-    def argv(self, source=None) -> list:
+    def argv(self) -> list:
         poison = len(self.manifest["poison_ids"])
         return ["-c", REINDEX_CONFIG, "-t", "parquet", "-w", "solr",
                 "-u", self.url,
                 "-s", f"solr_writer.batch_size={self.manifest['batch_size']}",
                 "-s", f"solr_writer.max_skipped={poison}",
                 "--master", self.spark.sparkContext.master,
-                source or self.parquet]
-
-    def warm(self) -> None:
-        from traject_spark import cli
-
-        first = sorted(glob.glob(os.path.join(self.parquet, "*.parquet")))[0]
-        cli.main(self.argv(first), spark=self.spark)
+                self.parquet]
 
     def run(self) -> float:
         from traject_spark import cli
@@ -327,6 +310,12 @@ class ReindexParquetSolr(Workload):
                 mapped, self.url, batch_size=self.manifest["batch_size"],
                 max_skipped=len(self.manifest["poison_ids"])))
         st = self._admin("stats")
+        problems = checks.check_reindex(st, self.manifest)
+        if skipped != len(self.manifest["poison_ids"]):
+            problems.append(f"writer skipped {skipped}, "
+                            f"planted {len(self.manifest['poison_ids'])}")
+        if problems:
+            raise RuntimeError(f"traced Solr write failed its check: {problems}")
         metrics.update({
             "writers.solr_batch_posts": st["batch_posts"],
             "writers.solr_single_posts": st["single_posts"],
