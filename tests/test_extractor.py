@@ -3,7 +3,6 @@ test/marc_extractor_test.rb (fields/specs iteration, joinable rules, byte
 slices, indicators, 880 handling) onto independently-authored fixtures."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from traject_spark.marc.extractor import marc_extract
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -13,7 +12,7 @@ from tests.fixtures import ALT_SCRIPT, BOOK, EMPTY, THE_TITLE
 
 def extract(spark, record, spec, **kw):
     df = spark.createDataFrame([("r", record)], MARC_SOURCE_SCHEMA)
-    out = df.select(marc_extract(F.col("marc"), spec, **kw).alias("v")).collect()
+    out = df.select(marc_extract(spec, **kw).alias("v")).collect()
     return out[0]["v"]
 
 
@@ -246,7 +245,7 @@ def test_control_only_spec_skips_datafield_branch(spark):
         datafields=[("245", " ", " ", [("a", "t")])],
     )
     assert extract(spark, rec, "008[0-1]", alternate_script=False) == ["ab"]
-    col = marc_extract(F.col("marc"), "008[0-1]", alternate_script=False)
+    col = marc_extract("008[0-1]", alternate_script=False)
     assert "datafields" not in repr(col)
     # default include mode still honors the pathological 880->$6 control
     # link, so it considers 880 fields only
@@ -366,62 +365,103 @@ def test_null_field_arrays_do_not_wipe_accumulator(spark):
     assert row["format"] is not None and "seed" in row["format"]
 
 
-def test_extract_sql_fastpath_parity(spark):
-    """The r16 generated-SQL extraction twin (_extract_sql) must match
-    the generic Column builder element-for-element on every edge shape:
-    merged multi-tag groups, doubled codes (joinable), per-subfield
-    specs, 880-with-$6 rewrite, 880-without-$6 drop, NULL subfield
-    values, NULL subfields arrays, NULL datafields, non-mergeable
-    repeated-tag specs (per-spec contribution order)."""
-    from traject_spark.marc.extractor import _extract_sql
-    from traject_spark.marc.spec import parse_marc_spec
+_F8 = "880520s1990    xx" + " " * 18 + "eng d"
 
-    recs = [
-        ("book", marc_record(datafields=[
-            ("100", "1", " ", [("a", "Author, A."), ("d", "1920-")]),
-            ("245", "1", "0", [("a", "Title :"), ("b", "sub /"), ("c", "A.")]),
-            ("650", " ", "0", [("a", "Topic"), ("x", "Hist"), ("z", "Geo")]),
+_PIN_RECS = [
+    ("book", marc_record(datafields=[
+        ("100", "1", " ", [("a", "Author, A."), ("d", "1920-")]),
+        ("245", "1", "0", [("a", "Title :"), ("b", "sub /"), ("c", "A.")]),
+        ("650", " ", "0", [("a", "Topic"), ("x", "Hist"), ("z", "Geo")]),
+    ])),
+    ("alt880", marc_record(datafields=[
+        ("245", "1", "0", [("a", "Latin title")]),
+        ("880", "1", "0", [("6", "245-01"), ("a", "Alt title")]),
+        ("880", "0", " ", [("a", "no-six-falls-back-to-880")]),
+    ])),
+    ("nulls", marc_record(datafields=[
+        ("245", "1", "0", [("a", None), ("b", "only-b")]),
+        ("100", " ", " ", []),
+    ])),
+    ("nullsubs", {"leader": " " * 24, "controlfields": [],
+                  "datafields": [{"tag": "245", "ind1": " ",
+                                  "ind2": " ", "subfields": None}]}),
+    ("nodata", {"leader": " " * 24, "controlfields": None,
+                "datafields": None}),
+    ("doubled", marc_record(datafields=[
+        ("020", " ", " ", [("a", "111"), ("a", "222"), ("z", "x")]),
+    ])),
+    ("ctrl", marc_record(
+        controlfields=[("001", "2710183"), ("008", _F8)],
+        datafields=[
+            ("041", "0", " ", [("a", "engfre")]),
+            ("245", "1", "4", [("a", "The title"), ("b", "sub")]),
+            ("650", " ", "0", [("a", "Topic")]),
+            ("650", "1", "7", [("a", "Other")]),
+            ("880", " ", " ", [("6", "008-01"), ("a", "alt008")]),
+            ("880", "1", "4", [("6", "245-01"), ("a", "Alt title")]),
+            ("880", " ", " ", [("6", "041-01"), ("a", "rus")]),
+            ("880", " ", " ", [("a", "orphan")]),
         ])),
-        ("alt880", marc_record(datafields=[
-            ("245", "1", "0", [("a", "Latin title")]),
-            ("880", "1", "0", [("6", "245-01"), ("a", "Alt title")]),
-            ("880", "0", " ", [("a", "no-six-falls-back-to-880")]),
-        ])),
-        ("nulls", marc_record(datafields=[
-            ("245", "1", "0", [("a", None), ("b", "only-b")]),
-            ("100", " ", " ", []),
-        ])),
-        ("nullsubs", {"leader": " " * 24, "controlfields": [],
-                      "datafields": [{"tag": "245", "ind1": " ",
-                                      "ind2": " ", "subfields": None}]}),
-        ("nodata", {"leader": " " * 24, "controlfields": None,
-                    "datafields": None}),
-        ("doubled", marc_record(datafields=[
-            ("020", " ", " ", [("a", "111"), ("a", "222"), ("z", "x")]),
-        ])),
+    ("shortctrl", marc_record(controlfields=[("008", "short")])),
+]
+
+#: ((spec, separator, alternate_script), {record_id: values}); records
+#: not listed extract []
+_EXTRACT_PINS = [
+    (("245ab", " ", "include"), {"alt880": ["Latin title", "Alt title"], "book": ["Title : sub /"], "ctrl": ["The title sub", "Alt title"], "nulls": ["only-b"]}),
+    (("100a:110a:111a", " ", "include"), {"book": ["Author, A."]}),
+    (("035a", None, "include"), {}),
+    (("050a:060a:090a:096a", None, "include"), {}),
+    (("600:610:650", " ", "include"), {"book": ["Topic Hist Geo"], "ctrl": ["Topic", "Other"]}),
+    (("020aa", " ", "include"), {"doubled": ["111 222"]}),
+    (("245a:245ab", " ", "include"), {"alt880": ["Latin title", "Latin title", "Alt title", "Alt title"], "book": ["Title :", "Title : sub /"], "ctrl": ["The title", "The title sub", "Alt title", "Alt title"], "nulls": ["only-b"]}),
+    (("100", "|", "include"), {"book": ["Author, A.|1920-"]}),
+    (("264c", None, "include"), {}),
+    (("001", " ", "include"), {"ctrl": ["2710183"]}),
+    (("001", " ", False), {"ctrl": ["2710183"]}),
+    (("008[35-37]", None, "include"), {"ctrl": ["eng", "008-01", "alt008"], "shortctrl": [None]}),
+    (("008[35-37]", None, False), {"ctrl": ["eng"], "shortctrl": [None]}),
+    (("008[7]", None, "include"), {"ctrl": ["1", "008-01", "alt008"], "shortctrl": [None]}),
+    (("008[5]", None, False), {"ctrl": ["0"], "shortctrl": [None]}),
+    (("008[5-6]", None, False), {"ctrl": ["0s"], "shortctrl": [""]}),
+    (("008[0-1]:001", " ", "include"), {"ctrl": ["2710183", "88", "008-01 alt008"], "shortctrl": ["sh"]}),
+    (("001[0-1]:001[0-3]", " ", False), {"ctrl": ["27", "2710"]}),
+    (("245|14|a", " ", "include"), {"ctrl": ["The title", "Alt title"]}),
+    (("650| 0|a", None, "include"), {"book": ["Topic"], "ctrl": ["Topic"]}),
+    (("650|17|a:650| 0|a", None, "include"), {"book": ["Topic"], "ctrl": ["Topic", "Other"]}),
+    (("880a", " ", "include"), {"alt880": ["no-six-falls-back-to-880"], "ctrl": ["orphan"]}),
+    (("880", " ", "include"), {"alt880": ["no-six-falls-back-to-880"], "ctrl": ["orphan"]}),
+    (("880a", " ", False), {"alt880": ["Alt title", "no-six-falls-back-to-880"], "ctrl": ["alt008", "Alt title", "rus", "orphan"]}),
+    (("880a", " ", "only"), {"alt880": ["no-six-falls-back-to-880"], "ctrl": ["orphan"]}),
+    (("245a", " ", "only"), {"alt880": ["Alt title"], "ctrl": ["Alt title"]}),
+    (("245a", " ", False), {"alt880": ["Latin title"], "book": ["Title :"], "ctrl": ["The title"]}),
+    (("245a", " ", True), {"alt880": ["Latin title", "Alt title"], "book": ["Title :"], "ctrl": ["The title", "Alt title"]}),
+    (("008[35-37]:041a", None, "only"), {"ctrl": ["008-01", "alt008", "rus"]}),
+    (("008[35-37]:041a", None, "include"), {"ctrl": ["eng", "engfre", "008-01", "alt008", "rus"], "shortctrl": [None]}),
+    (("245a:245b", " ", "include"), {"alt880": ["Latin title", "Alt title"], "book": ["Title :", "sub /"], "ctrl": ["The title", "sub", "Alt title"], "nulls": ["only-b"]}),
+    (("245ab:880a", " ", "include"), {"alt880": ["Latin title", "Alt title", "no-six-falls-back-to-880"], "book": ["Title : sub /"], "ctrl": ["The title sub", "Alt title", "orphan"], "nulls": ["only-b"]}),
+    (("041a:245a:650a", None, "include"), {"alt880": ["Latin title", "Alt title"], "book": ["Title :", "Topic"], "ctrl": ["engfre", "The title", "Topic", "Other", "Alt title", "rus"]}),
+    (("", " ", "include"), {}),
+]
+
+
+def test_extract_sql_fastpath_parity(spark):
+    """Value pins for every spec shape the SQL renderer handles: merged
+    multi-tag groups, doubled codes (joinable), per-subfield specs,
+    880-with-$6 rewrite, 880-without-$6 drop, NULL subfield values,
+    NULL subfields arrays, NULL datafields, repeated-tag specs (per-spec
+    contribution order), control fields and byte slices (short and
+    out-of-range), indicator filters, literal 880 specs, mixed
+    control/data specs, and alternate_script include/only/False/True.
+    The expected values were produced by the earlier Column builder
+    over the same inputs."""
+    df = spark.createDataFrame(_PIN_RECS, MARC_SOURCE_SCHEMA)
+    cols = [
+        marc_extract(spec, separator=sep, alternate_script=alt).alias(f"c{i}")
+        for i, ((spec, sep, alt), _) in enumerate(_EXTRACT_PINS)
     ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    SPECS = [
-        ("245ab", " "),
-        ("100a:110a:111a", " "),
-        ("035a", None),
-        ("050a:060a:090a:096a", None),
-        ("600:610:650", " "),
-        ("020aa", " "),          # doubled code joins again
-        ("245a:245ab", " "),     # repeated tag: non-mergeable path
-        ("100", "|"),            # all subfields, custom separator
-        ("264c", None),
-    ]
-    for spec, sep in SPECS:
-        parsed = parse_marc_spec(spec)
-        sql = _extract_sql("`marc`", parsed, sep)
-        assert sql is not None, spec
-        both = df.select(
-            F.expr(sql).alias("a"),
-            marc_extract(F.col("marc"), parsed, separator=sep).alias("b"),
-        )
-        diffs = both.filter(~F.col("a").eqNullSafe(F.col("b"))).count()
-        assert diffs == 0, f"spec {spec} diverged"
-    # ineligible shapes must fall back (return None), never mis-render
-    for bad in ("008[35-37]", "245|01|ab", "880a", "041a:008[35-37]"):
-        assert _extract_sql("`marc`", parse_marc_spec(bad), " ") is None
+    rows = df.select("record_id", *cols).collect()
+    for i, (key, expected) in enumerate(_EXTRACT_PINS):
+        got = {r["record_id"]: r[f"c{i}"] for r in rows}
+        want = {rid: expected.get(rid, []) for rid, _ in _PIN_RECS}
+        assert got == want, key

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from traject_spark import Pipeline
 from traject_spark.macros import (
+    extract_marc,
     extract_marc_filing_version,
     marc_era_facet,
     marc_formats,
@@ -380,12 +381,11 @@ def test_sortable_title_custom_spec_honors_indicators(spark):
 
 
 def test_marc_languages_sql_fastpath_parity(spark):
-    """The generated-SQL marc_languages twin (r10: one F.expr instead of
-    ~3k Py4J round trips, plus a direct string probe instead of the
-    array encode/split/slice) must match the generic Column path
-    element-for-element on every edge shape: packed >3-char 041a chunks,
-    880-with-$6 rewrite, 880-without-$6 drop, short 008 byte slice,
-    NULL subfield values, duplicate codes (distinct), map misses."""
+    """marc_languages value pins on every edge shape: packed >3-char
+    041a chunks, 880-with-$6 rewrite, 880-without-$6 drop, short 008
+    byte slice, NULL subfield values, duplicate codes (distinct), map
+    misses, and a custom spec. The expected values were produced by the
+    earlier Column builder over the same inputs."""
     from traject_spark import Pipeline
     from traject_spark.macros import marc_languages
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -410,17 +410,23 @@ def test_marc_languages_sql_fastpath_parity(spark):
         )),
     ]
     df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    fast = Pipeline().to_field("language", marc_languages()).apply(df)
-    slow = Pipeline().to_field(
-        "language", marc_languages(_sql_fastpath=False)
-    ).apply(df)
-    fr = {r["record_id"]: r["language"] for r in fast.collect()}
-    sr = {r["record_id"]: r["language"] for r in slow.collect()}
-    assert fr == sr, (fr, sr)
-    assert fr["r1"] == ["English", "French", "German", "Spanish"]
-    assert fr["r2"] == ["Hebrew", "German"]
-    # 008 contributes + 041a duplicate of 008 de-dups
-    assert fr["r4"] == ["French"]
+
+    def out(macro):
+        rows = Pipeline().to_field("language", macro).apply(df).collect()
+        return {r["record_id"]: r["language"] for r in rows}
+
+    assert out(marc_languages()) == {
+        "r1": ["English", "French", "German", "Spanish"],
+        "r2": ["Hebrew", "German"],
+        "r3": None,
+        "r4": ["French"],
+    }
+    assert out(marc_languages("041a")) == {
+        "r1": ["English", "French", "German"],
+        "r2": ["Hebrew", "German"],
+        "r3": None,
+        "r4": ["French"],
+    }
 
 
 def test_translation_map_sql_probe_shape_guards():
@@ -455,16 +461,16 @@ def test_translation_map_sql_probe_quoting(spark):
 
 
 def test_ident_safe_gates_sql_fastpath():
-    """ADVICE r10: the languages SQL fast path must engage only for
-    plain identifiers — a dotted name resolves a nested field via
-    F.col() but a top-level column via backtick-quoted SQL, so the two
-    paths would read DIFFERENT columns."""
-    from traject_spark.macros.semantics import _ident_safe
+    """The corpus and formats SQL fast paths must engage only for plain
+    identifiers — a dotted name resolves a nested field via F.col() but
+    a top-level column via backtick-quoted SQL, so the two paths would
+    read DIFFERENT columns."""
+    from traject_spark.sqlutil import ident_safe
 
-    assert _ident_safe("marc")
-    assert _ident_safe("_src_2")
+    assert ident_safe("marc")
+    assert ident_safe("_src_2")
     for bad in ("a.b", "a`b", "a b", "a-b", "", "1col", "a\nb", "a;b"):
-        assert not _ident_safe(bad), bad
+        assert not ident_safe(bad), bad
 
 
 def test_marc_formats_sql_fastpath_parity(spark):
@@ -540,12 +546,11 @@ def test_marc_formats_sql_fastpath_parity(spark):
 
 
 def test_marc_geo_sql_fastpath_parity(spark):
-    """The generated-SQL marc_geo_facet twin (r11: one F.expr instead of
-    ~1000 Py4J round trips) must match the Column path element-for-
-    element: 043a trailing-hyphen strip + map probe with misses dropped,
-    880-linked 043, 651a/691a FIRST-'. '-occurrence removal, one/two/
-    three $z shapes (two -> 'z2 (z1)' + posted z1), and whole-accumulator
-    distinct."""
+    """marc_geo_facet value pins: 043a trailing-hyphen strip + map probe
+    with misses dropped, 880-linked 043, 651a/691a FIRST-'. '-occurrence
+    removal, one/two/three $z shapes (two -> 'z2 (z1)' + posted z1),
+    whole-accumulator distinct, and custom specs. The expected values
+    were produced by the earlier Column builder over the same inputs."""
     from traject_spark import Pipeline
     from traject_spark.macros import marc_geo_facet
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -575,22 +580,30 @@ def test_marc_geo_sql_fastpath_parity(spark):
         ("empty", marc_record()),
     ]
     df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    fast = Pipeline().to_field("geo", marc_geo_facet()).apply(df)
-    slow = Pipeline().to_field(
-        "geo", marc_geo_facet(_sql_fastpath=False)
-    ).apply(df)
-    fr = {r["record_id"]: r["geo"] for r in fast.collect()}
-    sr = {r["record_id"]: r["geo"] for r in slow.collect()}
-    assert fr == sr, {k: (fr[k], sr[k]) for k in fr if fr[k] != sr[k]}
-    # absolute pins so both paths can't drift together
-    assert fr["hyphens"] == ["United States"]
-    assert fr["linked_880"] == ["France"]
-    # the FIRST '\. *' occurrence is the dot inside '(Mass.)' (zero
-    # trailing spaces qualify), matching the reference's un-anchored sub
-    assert fr["a_sub_first"] == ["Boston (Mass). Maps. More", "NoDotSpace"]
-    assert fr["z_shapes"] == ["Paris (France)", "France", "OnlyOne",
-                              "A", "B", "C"]
-    assert fr["dedup"] == ["United States"]
+
+    def out(macro):
+        rows = Pipeline().to_field("geo", macro).apply(df).collect()
+        return {r["record_id"]: r["geo"] for r in rows}
+
+    # the FIRST '\. *' occurrence in a_sub_first is the dot inside
+    # '(Mass.)' (zero trailing spaces qualify), matching the reference's
+    # un-anchored sub
+    assert out(marc_geo_facet()) == {
+        "a_sub_first": ["Boston (Mass). Maps. More", "NoDotSpace"],
+        "dedup": ["United States"],
+        "empty": None,
+        "hyphens": ["United States"],
+        "linked_880": ["France"],
+        "z_shapes": ["Paris (France)", "France", "OnlyOne", "A", "B", "C"],
+    }
+    assert out(marc_geo_facet("651a", "650:630")) == {
+        "a_sub_first": ["Boston (Mass). Maps. More"],
+        "dedup": ["United States"],
+        "empty": None,
+        "hyphens": ["United States"],
+        "linked_880": ["France"],
+        "z_shapes": ["Paris (France)", "France", "A", "B", "C"],
+    }
 
 
 def test_formats_sql_map_eligibility_guards():
@@ -738,6 +751,7 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     both modes against the forced Column path."""
     from traject_spark.macros.formats import formats_sql
     from traject_spark.macros.semantics import _geo_sql, _languages_sql
+    from traject_spark.marc.spec import parse_marc_spec
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
     from traject_spark.translation_map import TranslationMap
 
@@ -767,8 +781,15 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     geo_probe = TranslationMap("marc_geographic").sql_probe("v")
     sqls = {
         "formats": formats_sql("`marc`"),
-        "langs": _languages_sql("`marc`", lang_probe),
-        "geo": _geo_sql("`marc`", geo_probe),
+        "langs": _languages_sql(
+            "`marc`", parse_marc_spec("008[35-37]:041a:041d"), lang_probe
+        ),
+        "geo": _geo_sql(
+            "`marc`",
+            parse_marc_spec("651a:691a"),
+            parse_marc_spec("600:610:611:630:648:650:654:655:656:690:651:691"),
+            geo_probe,
+        ),
     }
     sel = ", ".join(f"{txt} as {name}" for name, txt in sqls.items())
     results = {}
@@ -798,11 +819,12 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
 
 
 def test_pubdate_sql_fastpath_parity(spark):
-    """The r16 generated-SQL publication-date twin must match the Column
-    decision procedure on every branch: q-ranges (in/out of tolerance,
-    'u' sub-first), r/p date2 preference, u-digit estimation with 10^k
-    tolerance, type n suppression, short/missing 008, 264c-then-260c
-    fallback, and the min/max clamps."""
+    """marc_publication_date value pins on every branch: q-ranges (in/out
+    of tolerance, 'u' sub-first), r/p date2 preference, u-digit
+    estimation with 10^k tolerance, type n suppression, short/missing
+    008, 264c-then-260c fallback, and the min/max clamps. The expected
+    values were produced by the earlier Column builder over the same
+    inputs."""
     from traject_spark import Pipeline
     from traject_spark.macros import marc_publication_date
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -837,27 +859,77 @@ def test_pubdate_sql_fastpath_parity(spark):
         ("empty", marc_record()),
     ]
     df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    for kwargs in ({}, {"estimate_tolerance": 120, "min_year": 1000,
-                    "max_year": 2030}, {"as_string": False}):
-        a = Pipeline().to_field(
-            "d", marc_publication_date(_sql_fastpath=True, **kwargs)
-        ).apply(df)
-        b = Pipeline().to_field(
-            "d", marc_publication_date(_sql_fastpath=False, **kwargs)
-        ).apply(df)
-        rows_a = {r["record_id"]: r["d"] for r in a.collect()}
-        rows_b = {r["record_id"]: r["d"] for r in b.collect()}
-        assert rows_a == rows_b, {
-            k: (rows_a[k], rows_b[k])
-            for k in rows_a if rows_a[k] != rows_b[k]
-        }
+    expected = [
+        ({}, {
+        "both_fallbacks": ["1954"],
+        "clamp_high": None,
+        "clamp_low": None,
+        "empty": None,
+        "no_008_260": ["1944"],
+        "no_008_264": ["1999"],
+        "p_zero_d2": ["1955"],
+        "q_equal": None,
+        "q_in_tol": None,
+        "q_out_tol": None,
+        "r_d2": ["1955"],
+        "s_u_est": None,
+        "s_u_toolong": None,
+        "short_008": None,
+        "short_date1": None,
+        "type_n": None,
+    }),
+        ({"estimate_tolerance": 120, "min_year": 1000, "max_year": 2030},
+         {
+        "both_fallbacks": ["1954"],
+        "clamp_high": None,
+        "clamp_low": None,
+        "empty": None,
+        "no_008_260": ["1944"],
+        "no_008_264": ["1999"],
+        "p_zero_d2": ["1955"],
+        "q_equal": None,
+        "q_in_tol": None,
+        "q_out_tol": None,
+        "r_d2": ["1955"],
+        "s_u_est": ["1950"],
+        "s_u_toolong": None,
+        "short_008": None,
+        "short_date1": None,
+        "type_n": None,
+    }),
+        ({"as_string": False}, {
+        "both_fallbacks": [1954],
+        "clamp_high": None,
+        "clamp_low": None,
+        "empty": None,
+        "no_008_260": [1944],
+        "no_008_264": [1999],
+        "p_zero_d2": [1955],
+        "q_equal": None,
+        "q_in_tol": None,
+        "q_out_tol": None,
+        "r_d2": [1955],
+        "s_u_est": None,
+        "s_u_toolong": None,
+        "short_008": None,
+        "short_date1": None,
+        "type_n": None,
+    }),
+    ]
+    for kwargs, want in expected:
+        rows = Pipeline().to_field(
+            "d", marc_publication_date(**kwargs)
+        ).apply(df).collect()
+        assert {r["record_id"]: r["d"] for r in rows} == want, kwargs
 
 
 def test_sortable_sql_fastpath_parity(spark):
-    """r16 generated-SQL twins of marc_sortable_title / _author must
-    match the Column path on the tricky shapes: ind2 non-filing slices
-    (0 / 4 / blank / beyond length), $k fallback, 880-linked 240/245,
-    missing fields, NULL subfield values, per-subfield trim chains."""
+    """marc_sortable_title / _author value pins on the tricky shapes:
+    ind2 non-filing slices (0 / 4 / blank / beyond length), $k fallback,
+    880-linked 240/245, missing fields, NULL subfield values,
+    per-subfield trim chains, and an indicator-filtered title spec. The
+    expected values were produced by the earlier Column builder over the
+    same inputs."""
     from traject_spark import Pipeline
     from traject_spark.macros import marc_sortable_author, marc_sortable_title
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -896,22 +968,56 @@ def test_sortable_sql_fastpath_parity(spark):
         ("empty", marc_record()),
     ]
     df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    for name, mk in (
-        ("tsort", marc_sortable_title),
-        ("asort", marc_sortable_author),
-    ):
-        a = Pipeline().to_field(name, mk(_sql_fastpath=True)).apply(df)
-        b = Pipeline().to_field(name, mk(_sql_fastpath=False)).apply(df)
-        ra = {r["record_id"]: r[name] for r in a.collect()}
-        rb = {r["record_id"]: r[name] for r in b.collect()}
-        assert ra == rb, (name, {k: (ra[k], rb[k]) for k in ra if ra[k] != rb[k]})
+    expected = [
+        (marc_sortable_title(), {
+        "empty": None,
+        "k_fallback": ["kit title"],
+        "linked_880": ["Alt [title]"],
+        "missing": None,
+        "nonfiling": ["Title x."],
+        "nonfiling_beyond": None,
+        "nonfiling_blank": ["A"],
+        "null_vals": ["b only"],
+        "plain": ["Title : sub"],
+        "via_240": ["ignored - 240 comes first"],
+    }),
+        (marc_sortable_title("245|14|ab"), {
+        "empty": None,
+        "k_fallback": None,
+        "linked_880": None,
+        "missing": None,
+        "nonfiling": ["Title x."],
+        "nonfiling_beyond": None,
+        "nonfiling_blank": None,
+        "null_vals": None,
+        "plain": None,
+        "via_240": None,
+    }),
+        (marc_sortable_author(), {
+        "empty": [""],
+        "k_fallback": ["kit title by X"],
+        "linked_880": ["245-01 Alt [title]"],
+        "missing": [""],
+        "nonfiling": ["Title x."],
+        "nonfiling_beyond": [""],
+        "nonfiling_blank": ["A"],
+        "null_vals": ["b only"],
+        "plain": ["Author, A.   Title sub"],
+        "via_240": ["uniform title"],
+    }),
+    ]
+    for macro, want in expected:
+        rows = Pipeline().to_field("s", macro).apply(df).collect()
+        assert {r["record_id"]: r["s"] for r in rows} == want
 
 
 def test_lcsh_sql_fastpath_parity(spark):
-    """r16 generated-SQL lcsh twin: subdivision separators, first-
+    """marc_lcsh_formatted value pins: subdivision separators, first-
     subfield prefix rule with the ORIGINAL index (a leading $6 shifts
     it), non-alpha code skip, NULL subfield value skip, trailing period
-    strip, empty -> nothing, 880-linked subjects, multi-field order."""
+    strip, empty -> nothing, 880-linked subjects, multi-field order, and
+    an indicator-filtered spec. The expected values were produced by the
+    earlier Column builder over the same inputs."""
     from traject_spark import Pipeline
     from traject_spark.macros import marc_lcsh_formatted
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -939,14 +1045,193 @@ def test_lcsh_sql_fastpath_parity(spark):
         ("empty", marc_record()),
     ]
     df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    for kwargs in ({}, {"subdivision_separator": "--",
-                        "other_separator": "~"}):
-        a = Pipeline().to_field(
-            "s", marc_lcsh_formatted(_sql_fastpath=True, **kwargs)
-        ).apply(df)
-        b = Pipeline().to_field(
-            "s", marc_lcsh_formatted(_sql_fastpath=False, **kwargs)
-        ).apply(df)
-        ra = {r["record_id"]: r["s"] for r in a.collect()}
-        rb = {r["record_id"]: r["s"] for r in b.collect()}
-        assert ra == rb, {k: (ra[k], rb[k]) for k in ra if ra[k] != rb[k]}
+    expected = [
+        (marc_lcsh_formatted(), {
+        "all_numeric": None,
+        "empty": None,
+        "full": ["Topic — Hist. — Geo — Maps", "Person, A. 1900-1980 Works"],
+        "leading_ctrl": [" Shifted — Sub"],
+        "linked_880": [" Alt subject"],
+        "null_vals": [" — OnlyX"],
+    }),
+        (marc_lcsh_formatted(subdivision_separator="--", other_separator="~"),
+         {
+        "all_numeric": None,
+        "empty": None,
+        "full": ["Topic--Hist.--Geo--Maps", "Person, A.~1900-1980~Works"],
+        "leading_ctrl": ["~Shifted--Sub"],
+        "linked_880": ["~Alt subject"],
+        "null_vals": ["--OnlyX"],
+    }),
+        (marc_lcsh_formatted("650| 0|ax:600"), {
+        "all_numeric": None,
+        "empty": None,
+        "full": ["Topic — Hist. — Geo — Maps", "Person, A. 1900-1980 Works"],
+        "leading_ctrl": [" Shifted — Sub"],
+        "linked_880": [" Alt subject"],
+        "null_vals": [" — OnlyX"],
+    }),
+    ]
+    for macro, want in expected:
+        rows = Pipeline().to_field("s", macro).apply(df).collect()
+        assert {r["record_id"]: r["s"] for r in rows} == want
+
+
+def test_filing_series_instrument_era_value_pins(spark):
+    """Value pins for the macros whose per-field callbacks render SQL:
+    filing-version non-filing strip (ind2, first-subfield rule, $k,
+    880-linked), traced-490 skip, instrument code variants, era $y
+    ranges (880-linked 651), and NULL subfields / NULL datafields. The
+    expected values were produced by the earlier Column builder over the
+    same inputs."""
+    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
+
+    recs = [
+        ("misc", marc_record(
+            controlfields=[("001", "m1"), ("008", "880520s1990    xx" + " " * 18 + "eng d")],
+            datafields=[
+                ("048", " ", " ", [("a", "ka01"), ("b", "va02"), ("a", "x")]),
+                ("245", "1", "4", [("a", "The title :"), ("b", "sub.")]),
+                ("245", "1", "0", [("6", "880-01"), ("k", "Kit")]),
+                ("490", "1", " ", [("a", "Traced series ;")]),
+                ("490", "0", " ", [("a", "Untraced series ;")]),
+                ("830", " ", "0", [("a", "Uniform series.")]),
+                ("650", " ", "0", [("a", "Art"), ("y", "20th century.")]),
+                ("651", " ", "0", [("a", "Rome"), ("y", "To 476."),
+                                   ("y", "Rome, ca. 753-476 B.C.")]),
+                ("880", " ", "0", [("6", "651-01"), ("a", "Roma"), ("y", "Ancient, 200-100")]),
+                ("880", "1", "4", [("6", "245-02"), ("a", "The alt")]),
+            ])),
+        ("nullsubs", {"leader": " " * 24, "controlfields": [],
+                      "datafields": [{"tag": t, "ind1": " ", "ind2": "4", "subfields": None}
+                                     for t in ("048", "245", "490", "651")]}),
+        ("nodata", {"leader": " " * 24, "controlfields": None, "datafields": None}),
+    ]
+    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
+    expected = [
+        (extract_marc_filing_version(), {
+            "misc": ["title : sub.", "Kit", "The alt"],
+            "nodata": None,
+            "nullsubs": None,
+        }),
+        (extract_marc_filing_version("245ab", include_original=True),
+         {
+            "misc": ["The title : sub.", "title : sub.", "The alt"],
+            "nodata": None,
+            "nullsubs": None,
+        }),
+        (marc_series_facet(), {
+            "misc": ["Untraced series", "Uniform series"],
+            "nodata": None,
+            "nullsubs": None,
+        }),
+        (marc_instrument_codes_normalized(), {
+            "misc": ["ka01", "ka", "va02", "va02.s", "va", "va.s"],
+            "nodata": None,
+            "nullsubs": None,
+        }),
+        (marc_era_facet(), {
+            "misc": ["20th century", "To 476", "Rome: Rome, ca. 753-476 B.C", "Roma: Ancient, 200-100"],
+            "nodata": None,
+            "nullsubs": None,
+        }),
+    ]
+    for macro, want in expected:
+        rows = Pipeline().to_field("v", macro).apply(df).collect()
+        assert {r["record_id"]: r["v"] for r in rows} == want
+
+
+def test_marc_languages_matches_880_linked_to_control_spec(spark):
+    """An 880 whose $6 links 008 matches the 008[35-37] spec as a data
+    field (the reference looks specs up by effective tag), so all its
+    subfield values are chunked into codes like any other match."""
+    rec = marc_record(
+        controlfields=[("008", "880520s1990    xx" + " " * 18 + "eng d")],
+        datafields=[("880", " ", " ", [("6", "008-01"), ("a", "fre")])],
+    )
+    assert run(spark, rec, marc_languages()) == ["English", "French"]
+
+
+def test_sql_ident_resolves_like_f_col(spark):
+    """sql_ident renders a column name the way F.col resolves it: dots
+    split nested parts, backticks quote a part literally (doubled
+    backtick = one backtick)."""
+    from traject_spark.sqlutil import sql_ident
+
+    assert sql_ident("marc") == "`marc`"
+    assert sql_ident("rec.marc") == "`rec`.`marc`"
+    assert sql_ident("`a.b`") == "`a.b`"
+    assert sql_ident("`a``b`.c") == "`a``b`.`c`"
+    for bad in ("a..b", ".a", "a.", "`a", "`a`b"):
+        with pytest.raises(ValueError):
+            sql_ident(bad)
+    df = spark.createDataFrame([(1, (2,))], "`a.b` int, a struct<b: int>")
+    for name in ("`a.b`", "a.b"):
+        got = df.select(F.expr(sql_ident(name)), F.col(name)).first()
+        assert got[0] == got[1], name
+
+
+def test_nested_source_col_matches_plain_frame(spark):
+    """Pipeline(source_col="rec.marc") over a frame whose MARC struct
+    sits inside a ``rec`` struct gives the same output as
+    source_col="marc" on the plain frame, for one extract_marc spec of
+    each shape and for every semantic macro."""
+    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
+
+    from tests.fixtures import ALT_SCRIPT
+
+    rec = marc_record(
+        controlfields=[("001", "n1"),
+                       ("008", "880520s1990    xx" + " " * 18 + "eng d")],
+        datafields=[
+            ("041", "0", " ", [("a", "engfre")]),
+            ("043", " ", " ", [("a", "n-us---")]),
+            ("048", " ", " ", [("a", "ka01"), ("b", "va02")]),
+            ("245", "1", "4", [("a", "The title :"), ("b", "sub.")]),
+            ("490", "0", " ", [("a", "Series ;")]),
+            ("650", " ", "0", [("a", "Art"), ("y", "20th century."),
+                               ("z", "France"), ("z", "Paris.")]),
+            ("651", " ", "0", [("a", "Rome"),
+                               ("y", "Rome, ca. 753-476 B.C.")]),
+            ("880", "1", "4", [("6", "245-01"), ("a", "The alt")]),
+            ("880", " ", " ", [("a", "orphan")]),
+        ],
+    )
+    rules = [
+        ("ctrl", extract_marc("001")),
+        ("bytes", extract_marc("008[35-37]")),
+        ("ind", extract_marc("245|14|a")),
+        ("lit880", extract_marc("880a")),
+        ("only", extract_marc("245a", alternate_script="only")),
+        ("no_alt", extract_marc("245a", alternate_script=False)),
+        ("oclc", oclcnum()),
+        ("author_sort", marc_sortable_author()),
+        ("title_sort", marc_sortable_title()),
+        ("filing", extract_marc_filing_version()),
+        ("language", marc_languages()),
+        ("series", marc_series_facet()),
+        ("instr_human", marc_instrumentation_humanized()),
+        ("instr", marc_instrument_codes_normalized()),
+        ("pub_date", marc_publication_date()),
+        ("lcc", marc_lcc_to_broad_category()),
+        ("geo", marc_geo_facet()),
+        ("era", marc_era_facet()),
+        ("lcsh", marc_lcsh_formatted()),
+    ]
+
+    def mapped(source_col, df):
+        p = Pipeline(source_col=source_col)
+        for name, macro in rules:
+            p.to_field(name, macro)
+        return [r.asDict() for r in p.apply(df).orderBy("record_id").collect()]
+
+    plain = spark.createDataFrame(
+        [("a", rec), ("b", BOOK), ("c", ALT_SCRIPT)], MARC_SOURCE_SCHEMA
+    )
+    nested = plain.select(
+        "record_id", F.struct(F.col("marc").alias("marc")).alias("rec")
+    )
+    want = mapped("marc", plain)
+    assert mapped("rec.marc", nested) == want
+    filled = {k for row in want for k, v in row.items() if v}
+    assert filled >= {name for name, _ in rules}, filled

@@ -833,6 +833,5 @@ def test_signature_checkpoint_is_lazy_and_size_warned(spark, monkeypatch):
     with monkeypatch.context() as m:
         m.setattr(_d, "_SIG_CHECKPOINT_WARN_BYTES", 0)
         with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
             minhash_lsh_candidates(df, num_hashes=16, bands=4)
         assert any("sig_col" in str(w.message) for w in caught)

@@ -338,7 +338,7 @@ def _checkpoint_sigs(sig: DataFrame) -> DataFrame:
             "memory+disk and is lost on executor failure. At this scale, "
             "materialize the signature column once (parquet/table) and pass "
             "sig_col= instead.",
-            ResourceWarning,
+            UserWarning,
             stacklevel=3,
         )
     return sig.localCheckpoint(eager=False)

@@ -13,10 +13,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from traject_spark.expr import let, let2, sql_let
+from traject_spark.sqlutil import ident_safe
 from traject_spark.translation_map import TranslationMap
 
-# one shared empty-array helper — drifting copies otherwise
-from traject_spark.marc.extractor import _empty
+
+def _empty() -> Column:
+    return F.array().cast("array<string>")
 
 
 def _normalized_gmd(marc: Column) -> Column:
@@ -400,11 +402,7 @@ def marc_formats(default: str = "Other", _sql_fastpath: bool = True):
     expression is built as generated SQL (one Py4J call instead of
     ~1450 — see formats_sql); ``_sql_fastpath=False`` forces the Column
     builder, which the parity test uses as the semantics reference."""
-    # one shared identifier gate (semantics._ident_safe carries the
-    # load-bearing rationale); map eligibility checked once at macro
-    # construction, not per compile
-    from traject_spark.macros.semantics import _ident_safe
-
+    # map eligibility checked once at macro construction, not per compile
     sql_ok = _sql_fastpath and _genre_maps_sql_eligible()
 
     def macro(acc: Column, ctx=None) -> Column:
@@ -412,7 +410,7 @@ def marc_formats(default: str = "Other", _sql_fastpath: bool = True):
         src_col = getattr(src, "source_col", None) if src else None
         # no lexer gate: formats_sql is lexer-independent (all literals
         # via _sq; test_compiled_sql_texts_are_lexer_independent)
-        if sql_ok and src_col and _ident_safe(src_col):
+        if sql_ok and src_col and ident_safe(src_col):
             return F.concat(
                 acc, F.expr(formats_sql(f"`{src_col}`", default=default))
             )

@@ -1,11 +1,12 @@
 """MARC21 semantic derivation macros.
 
 Ports of lib/traject/macros/marc21_semantics.rb — opinionated,
-deterministic record->values functions, each compiled to intra-row Column
-expressions (no UDF, no shuffle).  Every function cites the reference
-lines whose behavior it replicates, including the reference's own quirks
-(Ruby #to_i prefix parsing, sub-vs-gsub first-occurrence replacement,
-un-anchored period stripping) — those are part of the contract.
+deterministic record->values functions, each rendered as Spark SQL text
+through the extractor's renderer and built with ONE ``F.expr`` (no UDF,
+no shuffle). Every function cites the reference lines whose behavior it
+replicates, including the reference's own quirks (Ruby #to_i prefix
+parsing, sub-vs-gsub first-occurrence replacement, un-anchored period
+stripping) — those are part of the contract.
 """
 
 from __future__ import annotations
@@ -15,29 +16,22 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let, let2, let3, sql_let
+from traject_spark.expr import sql_let
 from traject_spark.marc.extractor import (
+    EFFECTIVE_TAG_SQL,
+    EMPTY_SQL,
     collect_matching_lines,
-    collect_subfields_expr,
-    marc_extract,
-    _effective_tag,
+    collect_subfields_sql,
+    extract_sql,
+    source_sql,
 )
 from traject_spark.marc.spec import parse_marc_spec
-from traject_spark.transforms import (
-    ruby_string_strip_expr,
-    ruby_to_i_expr,
-    trim_punctuation_expr,
-)
+from traject_spark.sqlutil import sql_ident
 from traject_spark.sqlutil import sql_str_lit as _rx_lit
-
 from traject_spark.translation_map import TranslationMap
 
-# one shared empty-array helper — drifting copies otherwise
-from traject_spark.marc.extractor import _empty
-
-#: geo-facet regexes, shared between the Column path and the SQL
-#: compiler — rendered through sql_str_lit so the compiled text is
-#: lexer-independent (advice r12)
+#: geo-facet regexes, rendered through sql_str_lit so the compiled text
+#: is lexer-independent
 _GEO_HYPHEN_RX = r"\-+\Z"
 _GEO_DOT_SPLIT_RX = r"(?s)\A(.*?)(?:\. *)(.*)\Z"
 _GEO_TRAIL_DOT_RX = r"\. *\Z"
@@ -46,14 +40,71 @@ _GEO_DOT_SPLIT_LIT = _rx_lit(_GEO_DOT_SPLIT_RX)
 _GEO_TRAIL_DOT_LIT = _rx_lit(_GEO_TRAIL_DOT_RX)
 
 
-def _ruby_sub_first(v: Column, pattern_no_groups: str, replacement: str = "") -> Column:
-    """Ruby String#sub: replace FIRST occurrence only.  Java regexp_replace
-    replaces all, so wrap: ^(.*?)PAT(.*)$ -> $1<repl>$2.  ``pattern_no_groups``
-    must not contain capturing groups."""
-    return F.regexp_replace(
-        v,
-        r"(?s)\A(.*?)" + f"(?:{pattern_no_groups})" + r"(.*)\Z",
-        "$1" + replacement + "$2",
+# --- SQL forms of the shared string transforms -----------------------------
+
+#: same pattern strings the Column builders in transforms.py compose
+_STRIP_PAT = _rx_lit(r"\A[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r\x00]+\Z")
+
+
+def _sql_strip(v_sql: str) -> str:
+    """SQL form of transforms.ruby_string_strip_expr."""
+    return f"regexp_replace({v_sql}, {_STRIP_PAT}, '')"
+
+
+_TRIM1 = _rx_lit(r" *[ ,/;:] *\Z")
+_TRIM2 = _rx_lit(r"(?U)( *\w{3,})\. *\Z")
+_TRIM3 = _rx_lit(r"\A\[?([^\[\]]+)\]?\Z")
+
+
+def _sql_trim_punct(v_sql: str) -> str:
+    """SQL form of transforms.trim_punctuation_expr (same four regexes
+    in the same order)."""
+    v1 = f"regexp_replace({v_sql}, {_TRIM1}, '')"
+    v2 = f"regexp_replace({v1}, {_TRIM2}, {_rx_lit('$1')})"
+    v3 = f"regexp_replace({v2}, {_TRIM3}, {_rx_lit('$1')})"
+    return _sql_strip(v3)
+
+
+def _sql_to_i(v_sql: str) -> str:
+    """Ruby String#to_i: parse leading integer prefix, else 0 (SQL form
+    of transforms.ruby_to_i_expr)."""
+    pat = _rx_lit(r"\A\s*([+-]?\d+)")
+    d = f"regexp_extract({v_sql}, {pat}, 1)"
+    return (
+        f"coalesce(CAST(CASE WHEN {d} != '' THEN {d} END AS bigint), "
+        "CAST(0 AS bigint))"
+    )
+
+
+def _sql_sub_first(v_sql: str, pattern_no_groups: str, replacement: str) -> str:
+    """Ruby String#sub: replace FIRST occurrence only. Java regexp_replace
+    replaces all, so wrap: ^(.*?)PAT(.*)$ -> $1<repl>$2.
+    ``pattern_no_groups`` must not contain capturing groups."""
+    pat = _rx_lit(r"(?s)\A(.*?)" + f"(?:{pattern_no_groups})" + r"(.*)\Z")
+    rep = _rx_lit("$1" + replacement + "$2")
+    return f"regexp_replace({v_sql}, {pat}, {rep})"
+
+
+def _sql_nonfiling(s_sql: str, ind2_sql: str) -> str:
+    """str.slice(ind2.to_i, len): '' when start == len, NULL when
+    start > len."""
+    return sql_let(
+        s_sql,
+        "nfs",
+        sql_let(
+            _sql_to_i(ind2_sql),
+            "nfn",
+            "CASE WHEN length(nfs) >= nfn THEN "
+            "substring(nfs, CAST((nfn + 1) AS int), 2000000) END",
+        ),
+    )
+
+
+def _first_field_sql(src: str, cond: str, body: str) -> str:
+    """``body`` over the record's first data field matching ``cond``;
+    ``cond`` reads the field as ``f``, ``body`` as ``fld``."""
+    return sql_let(
+        f"get(filter({src}.datafields, f -> {cond}), 0)", "fld", body
     )
 
 
@@ -71,7 +122,7 @@ def oclcnum(spec: str = "035a"):
     parsed = parse_marc_spec(spec)
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = _vals_fastpath(ctx, parsed, separator=None)
+        vals = F.expr(extract_sql(source_sql(ctx), parsed, None))
         nums = F.transform(vals, lambda v: F.regexp_extract(v, OCLCPAT, 1))
         kept = F.filter(nums, lambda x: x.isNotNull() & (x != ""))
         return F.concat(acc, F.array_distinct(kept))
@@ -79,100 +130,11 @@ def oclcnum(spec: str = "035a"):
     return macro
 
 
-def _vals_fastpath(ctx, parsed, separator) -> Column:
-    """marc_extract with the r16 generated-SQL build fast path: one
-    F.expr when the spec shape qualifies (see extractor._extract_sql),
-    the generic Column tree otherwise — value-identical either way."""
-    src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-    src_col = getattr(src, "source_col", None) if src is not None else "marc"
-    if src_col and _ident_safe(src_col):
-        sql = _extract_sql(f"`{src_col}`", parsed, separator)
-        if sql is not None:
-            return F.expr(sql)
-    return marc_extract(
-        ctx.marc if ctx is not None else F.col("marc"),
-        parsed,
-        separator=separator,
-    )
-
-
 # ---------------------------------------------------------------------------
 # sortable author / title (marc21_semantics.rb:66-118)
 # ---------------------------------------------------------------------------
 
-def _nonfiling_slice(s: Column, ind2: Column) -> Column:
-    """str.slice(ind2.to_i, len): '' when start == len, NULL when start > len."""
-    return let2(
-        s,
-        ruby_to_i_expr(ind2),
-        lambda sv, n: F.when(
-            F.length(sv) >= n, F.substring(sv, (n + 1).cast("int"), 2_000_000)
-        ).otherwise(F.lit(None).cast("string")),
-    )
-
-
-# --- SQL twins of the shared string transforms (r16 build fast path) ------
-
-#: same pattern strings the Column builders in transforms.py compose
-_STRIP_PAT = _rx_lit(r"\A[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r\x00]+\Z")
-
-
-def _sql_strip(v_sql: str) -> str:
-    """SQL twin of transforms.ruby_string_strip_expr."""
-    return f"regexp_replace({v_sql}, {_STRIP_PAT}, '')"
-
-
-_TRIM1 = _rx_lit(r" *[ ,/;:] *\Z")
-_TRIM2 = _rx_lit(r"(?U)( *\w{3,})\. *\Z")
-_TRIM3 = _rx_lit(r"\A\[?([^\[\]]+)\]?\Z")
-
-
-def _sql_trim_punct(v_sql: str) -> str:
-    """SQL twin of transforms.trim_punctuation_expr (same four regexes
-    in the same order)."""
-    v1 = f"regexp_replace({v_sql}, {_TRIM1}, '')"
-    v2 = f"regexp_replace({v1}, {_TRIM2}, {_rx_lit('$1')})"
-    v3 = f"regexp_replace({v2}, {_TRIM3}, {_rx_lit('$1')})"
-    return _sql_strip(v3)
-
-
-def _sql_nonfiling(s_sql: str, ind2_sql: str) -> str:
-    """SQL twin of _nonfiling_slice (same let2 shape)."""
-    return sql_let(
-        s_sql,
-        "nfs",
-        sql_let(
-            _sql_to_i(ind2_sql),
-            "nfn",
-            "CASE WHEN length(nfs) >= nfn THEN "
-            "substring(nfs, CAST((nfn + 1) AS int), 2000000) END",
-        ),
-    )
-
-
-from traject_spark.marc.extractor import _SQL_FIRST6  # noqa: E402
-
-_SQL_EFFTAG = (
-    "CASE WHEN f.tag = '880' THEN "
-    f"coalesce(substring({_SQL_FIRST6}, 1, 3), '880') ELSE f.tag END"
-)
-
-
-def _simple_data_spec(s) -> bool:
-    """Gate shared by the sortable/lcsh SQL twins: plain datafield spec,
-    no indicator filters, not 880, not a control tag."""
-    from traject_spark.marc.serialize import CONTROL_TAGS
-
-    return (
-        not s.is_byte_spec
-        and s.ind1 is None
-        and s.ind2 is None
-        and s.tag != "880"
-        and s.tag not in CONTROL_TAGS
-    )
-
-
-def marc_sortable_author(_sql_fastpath: bool = True):
+def marc_sortable_author():
     """Concat of first 100/110/111 (first+strip) and first 240-else-245
     title with ind2 non-filing chars stripped; ALWAYS appends one string,
     '' when nothing found (marc21_semantics.rb:66-88).
@@ -184,131 +146,52 @@ def marc_sortable_author(_sql_fastpath: bool = True):
     trim-punctuated, only stripped. The per-subfield trim on the TITLE
     half is explicit in the reference (marc21_semantics.rb:80) and kept.
     """
-
-    _onexx_spec = parse_marc_spec("100:110:111")
-
-    def _sql(marc_sql: str) -> str:
-        onexx = _sql_strip(
-            f"get({_extract_sql(marc_sql, _onexx_spec, ' ')}, 0)"
-        )
-        joined = (
-            "array_join(transform(fld.subfields, sf -> "
-            + _sql_strip(_sql_trim_punct(_sql_strip("sf.value")))
-            + "), ' ')"
-        )
-        with_field = _sql_strip(_sql_nonfiling(joined, "fld.ind2"))
-        title = sql_let(
-            f"get(filter({marc_sql}.datafields, "
-            f"f -> ({_SQL_EFFTAG}) IN ('240', '245')), 0)",
-            "fld",
-            with_field,
-        )
-        return f"array(concat_ws('   ', {onexx}, {title}))"
+    onexx_spec = parse_marc_spec("100:110:111")
+    joined = (
+        "array_join(transform(fld.subfields, sf -> "
+        + _sql_strip(_sql_trim_punct(_sql_strip("sf.value")))
+        + "), ' ')"
+    )
+    with_field = _sql_strip(_sql_nonfiling(joined, "fld.ind2"))
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
-        )
-        if _sql_fastpath and src_col and _ident_safe(src_col):
-            return F.concat(acc, F.expr(_sql(f"`{src_col}`")))
-        onexx_raw = F.get(_vals_fastpath(ctx, _onexx_spec, " "), 0)
-        onexx = ruby_string_strip_expr(onexx_raw)
-
-        def with_field(fld: Column) -> Column:
-            joined = F.array_join(
-                F.transform(
-                    fld["subfields"],
-                    lambda sf: ruby_string_strip_expr(
-                        trim_punctuation_expr(ruby_string_strip_expr(sf["value"]))
-                    ),
-                ),
-                " ",
-            )
-            return ruby_string_strip_expr(_nonfiling_slice(joined, fld["ind2"]))
-
-        title = let(
-            F.get(
-                F.filter(
-                    ctx.marc["datafields"],
-                    lambda f: _effective_tag(f).isin(["240", "245"]),
-                ),
-                0,
-            ),
-            with_field,
+        src = source_sql(ctx)
+        onexx = _sql_strip(f"get({extract_sql(src, onexx_spec, ' ')}, 0)")
+        title = _first_field_sql(
+            src, f"({EFFECTIVE_TAG_SQL}) IN ('240', '245')", with_field
         )
         # [onexx, title].compact.join("   ") — concat_ws skips NULLs
-        return F.concat(acc, F.array(F.concat_ws("   ", onexx, title)))
+        return F.concat(
+            acc, F.expr(f"array(concat_ws('   ', {onexx}, {title}))")
+        )
 
     return macro
 
 
-def marc_sortable_title(spec: str = "245ab", _sql_fastpath: bool = True):
+def marc_sortable_title(spec: str = "245ab"):
     """First 245ab (fallback first $k), ind2 non-filing chars stripped,
     trim_punctuation; nothing appended when no field
     (marc21_semantics.rb:92-118)."""
     (parsed,) = parse_marc_spec(spec)
-
-    def _sql(marc_sql: str) -> str:
-        # mirror of the Column body below, rendered once (r16 build fast
-        # path); only reached for indicator-free datafield specs
-        from traject_spark.marc.extractor import _sql_collect_subfields
-
-        joined = (
-            "get(" + _sql_collect_subfields(parsed, " ", fvar="fld") + ", 0)"
-        )
-        k = (
-            "get(filter(fld.subfields, sf -> sf.code = 'k'), 0).value"
-        )
-        with_field = _sql_trim_punct(
-            _sql_nonfiling(f"coalesce({joined}, {k})", "fld.ind2")
-        )
-        st = sql_let(
-            f"get(filter({marc_sql}.datafields, "
-            f"f -> ({_SQL_EFFTAG}) = '{parsed.tag}'), 0)",
-            "fld",
-            with_field,
-        )
-        return f"filter(array({st}), x -> x IS NOT NULL)"
+    # honor indicator filters a CUSTOM spec carries (the reference's
+    # hardcoded '245ab' never has them, but its collect_matching_lines
+    # would apply them if it did — the faithful generalization of our
+    # net-new spec parameter)
+    cond = f"({EFFECTIVE_TAG_SQL}) = {_rx_lit(parsed.tag)}"
+    if parsed.ind1 is not None:
+        cond += f" AND (f.ind1 = {_rx_lit(parsed.ind1)})"
+    if parsed.ind2 is not None:
+        cond += f" AND (f.ind2 = {_rx_lit(parsed.ind2)})"
+    joined = f"get({collect_subfields_sql('fld', parsed, ' ')}, 0)"
+    k = "get(filter(fld.subfields, sf -> sf.code = 'k'), 0).value"
+    with_field = _sql_trim_punct(
+        _sql_nonfiling(f"coalesce({joined}, {k})", "fld.ind2")
+    )
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
-        )
-        if (
-            _sql_fastpath
-            and _simple_data_spec(parsed)
-            and src_col
-            and _ident_safe(src_col)
-        ):
-            return F.concat(acc, F.expr(_sql(f"`{src_col}`")))
-        def with_field(fld: Column) -> Column:
-            joined = F.get(collect_subfields_expr(fld, parsed, " "), 0)
-            k = F.get(
-                F.filter(fld["subfields"], lambda sf: sf["code"] == "k"), 0
-            )["value"]
-            s = F.coalesce(joined, k)
-            return trim_punctuation_expr(_nonfiling_slice(s, fld["ind2"]))
-
-        def field_match(f: Column) -> Column:
-            # honor indicator filters a CUSTOM spec carries (the
-            # reference's hardcoded '245ab' never has them, but its
-            # collect_matching_lines would apply them if it did — the
-            # faithful generalization of our net-new spec parameter)
-            cond = _effective_tag(f) == parsed.tag
-            if parsed.ind1 is not None:
-                cond = cond & (f["ind1"] == parsed.ind1)
-            if parsed.ind2 is not None:
-                cond = cond & (f["ind2"] == parsed.ind2)
-            return cond
-
-        st = let(
-            F.get(F.filter(ctx.marc["datafields"], field_match), 0),
-            with_field,
-        )
+        st = _first_field_sql(source_sql(ctx), cond, with_field)
         return F.concat(
-            acc, F.filter(F.array(st), lambda x: x.isNotNull())
+            acc, F.expr(f"filter(array({st}), x -> x IS NOT NULL)")
         )
 
     return macro
@@ -325,30 +208,34 @@ def extract_marc_filing_version(spec: str = "245abdefghknp", include_original: b
     """
     parsed = parse_marc_spec(spec)
 
-    def per_field(f: Column, s) -> Column:
-        def with_head(head: Column) -> Column:
-            ind2 = ruby_to_i_expr(f["ind2"])
-            first_code = F.get(f["subfields"], 0)["code"]
-            spec_covers = (
-                F.lit(False)
-                if s.subfields is None
-                else first_code.isin(list(s.subfields))
-            )
-            filing = F.when(
-                (ind2 > 0) & spec_covers, _nonfiling_slice(head, f["ind2"])
-            ).otherwise(head)
-            return F.when(
-                head.isNotNull() & (head != ""),
-                F.array_distinct(F.array(head, filing))
-                if include_original
-                else F.array(filing),
-            ).otherwise(_empty())
-
-        return let(F.get(collect_subfields_expr(f, s, " "), 0), with_head)
+    def per_field(f: str, s) -> str:
+        spec_covers = (
+            "false"
+            if s.subfields is None
+            else f"get({f}.subfields, 0).code IN ("
+            + ", ".join(_rx_lit(c) for c in s.subfields)
+            + ")"
+        )
+        filing = (
+            f"CASE WHEN ({_sql_to_i(f + '.ind2')} > 0) AND ({spec_covers}) "
+            f"THEN {_sql_nonfiling('head', f + '.ind2')} ELSE head END"
+        )
+        out = (
+            f"array_distinct(array(head, {filing}))"
+            if include_original
+            else f"array({filing})"
+        )
+        return sql_let(
+            f"get({collect_subfields_sql(f, s, ' ')}, 0)",
+            "head",
+            f"CASE WHEN (head IS NOT NULL) AND (head != '') THEN {out} "
+            f"ELSE {EMPTY_SQL} END",
+        )
 
     def macro(acc: Column, ctx=None) -> Column:
         return F.concat(
-            acc, collect_matching_lines(ctx.marc, parsed, per_field)
+            acc,
+            F.expr(collect_matching_lines(source_sql(ctx), parsed, per_field)),
         )
 
     return macro
@@ -358,123 +245,46 @@ def extract_marc_filing_version(spec: str = "245abdefghknp", include_original: b
 # languages (marc21_semantics.rb:195-223)
 # ---------------------------------------------------------------------------
 
-_LANGUAGES_DEFAULT_SPEC = "008[35-37]:041a:041d"
-
-
-# one definition shared with the extractor's generated-SQL fast path
-# (moved there in r16; re-exported here for existing importers)
-from traject_spark.marc.extractor import _extract_sql, _ident_safe  # noqa: E402,F401
-
-
-def _languages_sql(marc_sql: str, probe_sql: str) -> str:
-    """Generated-SQL twin of the DEFAULT-spec marc_languages expression
-    tree (the r9 ANN fast-path pattern): the Column builder issues ~3k
-    Py4J round trips per compile (~1.3s measured r10 — rivaling the
-    600k-row execution); this renders the identical tree as ONE string
-    for ``F.expr``. Element-for-element parity with the Column path is
-    pinned by tests/test_semantics.py::test_marc_languages_sql_fastpath
-    — each piece mirrors a named helper:
-
-    - ctrl: 008 byte-slice [35-37] (extractor._byteslice: NULL when the
-      fixed field is shorter than the range start);
-    - match: 041 tag OR an 880 whose first $6 links 041
-      (extractor.collect_matching_lines match_cond, $6 via null-safe
-      ``get``);
-    - per-field: $a then $d values (non-null only), each chunked into
-      3-char codes when longer than 3 (marc21_semantics.rb:203-210);
-    - let-bound ctrl/data combine (expr.let2 aggregate form), distinct,
-      then the single-string map probe (TranslationMap.sql_probe) with
-      misses dropped.
-    """
-    first6 = "get(filter(f.subfields, sf -> sf.code = '6'), 0).value"
-    ctrl = (
-        f"flatten(transform(filter({marc_sql}.controlfields, "
-        "f -> f.tag = '008'), f -> array(CASE WHEN length(f.value) >= 35 "
-        "THEN substring(f.value, 36, 3) END)))"
-    )
-    match = (
-        "(f.tag = '041' OR ((f.tag = '880') AND "
-        f"(substring({first6}, 1, 3) = '041')))"
-    )
-
-    def collect_chunked(code: str) -> str:
-        vals = (
-            "coalesce(transform(filter(f.subfields, "
-            f"sf -> (sf.code = '{code}') AND (sf.value IS NOT NULL)), "
-            "sf -> sf.value), CAST(array() AS array<string>))"
-        )
-        return (
-            f"flatten(transform({vals}, v -> CASE WHEN length(v) = 3 "
-            "THEN array(v) ELSE regexp_extract_all(v, '(.{1,3})', 1) "
-            "END))"
-        )
-
-    data = (
-        f"flatten(transform(filter({marc_sql}.datafields, f -> {match}), "
-        f"f -> concat({collect_chunked('a')}, {collect_chunked('d')})))"
-    )
-    zero = "CAST(array() AS array<int>)"
-    codes = (
-        f"aggregate({zero}, {ctrl}, (acc, x) -> acc, "
-        f"c -> aggregate({zero}, {data}, (acc, x) -> acc, "
-        "d -> coalesce(concat(c, d), c, d, "
-        "CAST(array() AS array<string>))))"
-    )
+def _chunked_codes(f: str, s) -> str:
+    """Subfield values with packed >3-char values chunked into 3-char
+    codes (marc21_semantics.rb:203-210)."""
     return (
-        f"filter(transform(array_distinct({codes}), "
-        f"v -> {probe_sql}), x -> x IS NOT NULL)"
+        f"flatten(transform({collect_subfields_sql(f, s, None)}, "
+        "v -> CASE WHEN length(v) = 3 THEN array(v) "
+        f"ELSE regexp_extract_all(v, {_rx_lit('(.{1,3})')}, 1) END))"
     )
+
+
+def _languages_sql(src: str, specs, probe_sql: Optional[str]) -> str:
+    """De-duplicated language codes of ``specs`` over the record struct
+    ``src``; with ``probe_sql`` (a TranslationMap.sql_probe over ``v``)
+    the codes are translated and misses dropped."""
+    codes = (
+        f"array_distinct({collect_matching_lines(src, specs, _chunked_codes)})"
+    )
+    if probe_sql is None:
+        return codes
+    return f"filter(transform({codes}, v -> {probe_sql}), x -> x IS NOT NULL)"
 
 
 def marc_languages(
-    spec: str = _LANGUAGES_DEFAULT_SPEC,
+    spec: str = "008[35-37]:041a:041d",
     translation_map: Optional[TranslationMap] = None,
-    _sql_fastpath: bool = True,
 ):
     """Byte-slice + subfield codes; packed >3-char values chunked into
-    3-char codes; de-dup; translate (marc21_semantics.rb:195-223).
-
-    ``_sql_fastpath=False`` forces the generic Column builder — the
-    parity-test hook; production keeps the default (the generated-SQL
-    path applies only for the default spec + a simple map, and builds
-    in ~1 Py4J round trip instead of ~3k)."""
+    3-char codes; de-dup; translate (marc21_semantics.rb:195-223)."""
     parsed = parse_marc_spec(spec)
     if translation_map is None:
         translation_map = TranslationMap("marc_languages")
     elif not isinstance(translation_map, TranslationMap):
         translation_map = TranslationMap(translation_map)
-
-    probe_sql = (
-        translation_map.sql_probe("v")
-        if _sql_fastpath and spec == _LANGUAGES_DEFAULT_SPEC
-        else None
-    )
-
-    def data_fn(f: Column, s) -> Column:
-        vals = collect_subfields_expr(f, s, None)
-        return F.flatten(
-            F.transform(
-                vals,
-                lambda v: F.when(F.length(v) == 3, F.array(v)).otherwise(
-                    F.regexp_extract_all(v, F.lit("(.{1,3})"), 1)
-                ),
-            )
-        )
+    probe_sql = translation_map.sql_probe("v")
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None)
-        src_col = getattr(src, "source_col", None) if src else None
-        # no lexer gate: the compiled SQL renders every regex/text
-        # literal via sql_str_lit, so it parses identically under both
-        # string-lexer modes (pinned by
-        # test_compiled_sql_texts_are_lexer_independent)
-        if probe_sql is not None and src_col and _ident_safe(src_col):
-            return F.concat(
-                acc, F.expr(_languages_sql(f"`{src_col}`", probe_sql))
-            )
-        codes = collect_matching_lines(ctx.marc, parsed, data_fn)
-        codes = F.array_distinct(codes)
-        return F.concat(acc, translation_map.translate_array_expr(codes))
+        codes = F.expr(_languages_sql(source_sql(ctx), parsed, probe_sql))
+        if probe_sql is None:
+            codes = translation_map.translate_array_expr(codes)
+        return F.concat(acc, codes)
 
     return macro
 
@@ -490,15 +300,17 @@ def marc_series_facet(
     trim-punctuated, NOT de-duplicated (marc21_semantics.rb:230-245)."""
     parsed = parse_marc_spec(spec)
 
-    def per_field(f: Column, s) -> Column:
-        vals = collect_subfields_expr(f, s, " ")
-        return F.when(
-            (f["tag"] == "490") & (f["ind1"] == "1"), _empty()
-        ).otherwise(vals)
+    def per_field(f: str, s) -> str:
+        return (
+            f"CASE WHEN ({f}.tag = '490') AND ({f}.ind1 = '1') "
+            f"THEN {EMPTY_SQL} ELSE {collect_subfields_sql(f, s, ' ')} END"
+        )
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = collect_matching_lines(ctx.marc, parsed, per_field)
-        return F.concat(acc, F.transform(vals, trim_punctuation_expr))
+        vals = collect_matching_lines(source_sql(ctx), parsed, per_field)
+        return F.concat(
+            acc, F.expr(f"transform({vals}, v -> {_sql_trim_punct('v')})")
+        )
 
     return macro
 
@@ -527,7 +339,7 @@ def marc_instrumentation_humanized(
     )
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = marc_extract(ctx.marc, parsed, separator=None)
+        vals = F.expr(extract_sql(source_sql(ctx), parsed, None))
         human = F.array_distinct(
             F.flatten(
                 F.transform(
@@ -547,32 +359,30 @@ def marc_instrumentation_humanized(
 def marc_instrument_codes_normalized(spec: str = "048"):
     """048 codes indexed as full code, 2-char prefix, and '.s'-suffixed
     variants for $b soloist subfields; de-dup (marc21_semantics.rb:275-305)."""
-
-    def per_field(f: Column, s) -> Column:
-        def per_sf(sf: Column) -> Column:
-            v = sf["value"]
-            bare = F.substring(v, 1, 2)
-            is_b = sf["code"] == "b"
-            long_enough = F.length(v) >= 2
-            has_number = F.length(v) >= 4
-            parts = F.concat(
-                F.when(long_enough, F.array(v)).otherwise(_empty()),
-                F.when(long_enough & is_b, F.array(F.concat(v, F.lit(".s")))).otherwise(_empty()),
-                F.when(long_enough & has_number, F.array(bare)).otherwise(_empty()),
-                F.when(
-                    long_enough & has_number & is_b,
-                    F.array(F.concat(bare, F.lit(".s"))),
-                ).otherwise(_empty()),
-            )
-            return parts
-
-        return F.flatten(F.transform(f["subfields"], per_sf))
-
     parsed = parse_marc_spec(spec)
+    long_enough = "length(sf.value) >= 2"
+    has_number = "length(sf.value) >= 4"
+    is_b = "sf.code = 'b'"
+    variants = [
+        (long_enough, "sf.value"),
+        (f"({long_enough}) AND ({is_b})", "concat(sf.value, '.s')"),
+        (f"({long_enough}) AND ({has_number})", "substring(sf.value, 1, 2)"),
+        (
+            f"({long_enough}) AND ({has_number}) AND ({is_b})",
+            "concat(substring(sf.value, 1, 2), '.s')",
+        ),
+    ]
+    per_sf = ", ".join(
+        f"CASE WHEN {cond} THEN array({v}) ELSE {EMPTY_SQL} END"
+        for cond, v in variants
+    )
+
+    def per_field(f: str, s) -> str:
+        return f"flatten(transform({f}.subfields, sf -> concat({per_sf})))"
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = collect_matching_lines(ctx.marc, parsed, per_field)
-        return F.concat(acc, F.array_distinct(vals))
+        vals = collect_matching_lines(source_sql(ctx), parsed, per_field)
+        return F.concat(acc, F.expr(f"array_distinct({vals})"))
 
     return macro
 
@@ -581,14 +391,11 @@ def marc_instrument_codes_normalized(spec: str = "048"):
 # publication date (marc21_semantics.rb:316-394)
 # ---------------------------------------------------------------------------
 
-def publication_date_expr(
-    marc: Column,
-    estimate_tolerance: int = 15,
-    min_year: int = 500,
-    max_year: Optional[int] = None,
-) -> Column:
-    """The reference's single-date decision procedure as ONE Column
-    expression (long, nullable) — oracle-checkable SQL, no UDF.
+def _pubdate_sql(
+    src: str, estimate_tolerance: int, min_year: int, max_year: int
+) -> str:
+    """The reference's single-date decision procedure as ONE SQL
+    expression (bigint, nullable) over the record struct ``src``.
 
     Logic (marc21_semantics.rb:335-394):
     - 008 with length >= 11: date_type = byte 6, date1 = bytes 7-10,
@@ -600,126 +407,13 @@ def publication_date_expr(
       'u' digit -> 0, midpoint via 10^ucount when within tolerance;
     - fallback: first 4 digits found in 264c, then 260c;
     - clamp to [min_year, max_year].
+
+    Every shared piece is let-bound (sql_let): the naive formulation
+    duplicated the 008 subtree hundreds of times and took minutes to
+    plan/codegen. The dtype/d1!=d2 guards sit OUTSIDE the let bindings:
+    CASE only evaluates its value expression when the condition holds,
+    so the regex subs are skipped for the (dominant) non-'q' records.
     """
-    if max_year is None:
-        import datetime
-
-        max_year = datetime.date.today().year + 6
-
-    # Every shared piece is let-bound: the naive formulation duplicated the
-    # 008 subtree hundreds of times and took minutes to plan/codegen.
-    def from_008_body(f8: Column, dtype: Column, d1: Column, d2: Column) -> Column:
-        # q-range branch: Ruby sub() replaces only the FIRST 'u'.
-        # The dtype/d1!=d2 guards sit OUTSIDE the let bindings: CaseWhen
-        # only evaluates its value expression when the condition holds, so
-        # the two regex subs are skipped entirely for the (dominant)
-        # non-'q' records instead of running on every row
-        q_val = F.when(
-            (dtype == "q") & (d1 != d2),
-            let2(
-                ruby_to_i_expr(_ruby_sub_first(d1, "u", "0")),
-                ruby_to_i_expr(_ruby_sub_first(d2, "u", "9")),
-                lambda q1, q2: F.when(
-                    (q2 > q1) & ((q2 - q1) <= F.lit(estimate_tolerance)),
-                    F.floor((q1 + q2) / 2).cast("long"),
-                ),
-            ),
-        )
-        # single-date branch, same lazy-guard treatment; the 'u' counting
-        # and u->0 fill are char-level translate, not regex
-        date_str = F.when(
-            dtype.isin(["r", "p"]) & (ruby_to_i_expr(d2) != 0), d2
-        ).otherwise(d1)
-        single_val = F.when(
-            ~dtype.isin(["n", "q"]),
-            let(
-                date_str,
-                lambda ds: let2(
-                    F.length(ds) - F.length(F.translate(ds, "u", "")),
-                    ruby_to_i_expr(F.translate(ds, "u", "0")),
-                    lambda ucount, date_num: let(
-                        F.pow(F.lit(10.0), ucount.cast("double")).cast("long"),
-                        lambda delta: F.when(
-                            (ucount > 0) & (date_num != 0),
-                            F.when(
-                                delta <= F.lit(estimate_tolerance),
-                                (date_num + F.floor(delta / 2)).cast("long"),
-                            ),
-                        ).otherwise(F.when(date_num != 0, date_num)),
-                    ),
-                ),
-            ),
-        )
-        usable = f8.isNotNull() & (F.length(f8) >= 11)
-        return F.when(usable, F.coalesce(q_val, single_val))
-
-    f8_raw = F.get(
-        F.filter(marc["controlfields"], lambda f: f["tag"] == "008"), 0
-    )["value"]
-    from_008 = let(
-        f8_raw,
-        lambda f8: let3(
-            F.substring(f8, 7, 1),
-            F.substring(f8, 8, 4),
-            F.when(F.length(f8) > 15, F.substring(f8, 12, 4)).otherwise(
-                F.substring(f8, 8, 4)
-            ),
-            lambda dtype, d1, d2: from_008_body(f8, dtype, d1, d2),
-        ),
-    )
-
-    # --- 264c / 260c fallback: first 4-digit run anywhere ----------------
-    def four_digits(v: Column) -> Column:
-        return let(
-            F.regexp_extract(v, r"(\d{4})", 1),
-            lambda g: F.when(g.isNotNull() & (g != ""), g.cast("long")),
-        )
-
-    fallback = F.coalesce(
-        four_digits(F.get(marc_extract(marc, "264c", separator=None), 0)),
-        four_digits(F.get(marc_extract(marc, "260c", separator=None), 0)),
-    )
-
-    return let(
-        F.coalesce(from_008, fallback),
-        lambda found: F.when(
-            found.isNotNull()
-            & (found >= F.lit(min_year))
-            & (found <= F.lit(max_year)),
-            found,
-        ),
-    )
-
-
-def _sql_to_i(v_sql: str) -> str:
-    """SQL twin of transforms.ruby_to_i_expr (duplicated subtree like the
-    Column form — the regexp_extract appears twice there too)."""
-    pat = _rx_lit(r"\A\s*([+-]?\d+)")
-    d = f"regexp_extract({v_sql}, {pat}, 1)"
-    return (
-        f"coalesce(CAST(CASE WHEN {d} != '' THEN {d} END AS bigint), "
-        "CAST(0 AS bigint))"
-    )
-
-
-def _sql_sub_first(v_sql: str, pattern_no_groups: str, replacement: str) -> str:
-    """SQL twin of _ruby_sub_first (same wrapped pattern + $1<repl>$2
-    replacement string)."""
-    pat = _rx_lit(r"(?s)\A(.*?)" + f"(?:{pattern_no_groups})" + r"(.*)\Z")
-    rep = _rx_lit("$1" + replacement + "$2")
-    return f"regexp_replace({v_sql}, {pat}, {rep})"
-
-
-def _pubdate_sql(
-    marc_sql: str, estimate_tolerance: int, min_year: int, max_year: int
-) -> str:
-    """Generated-SQL twin of :func:`publication_date_expr` — the biggest
-    single build cost of the flagship pipeline (~0.56s of Py4J round
-    trips per fresh compile, r16 probe) rendered as ONE parseable
-    string. Mirrors the Column tree piece for piece (the let bindings
-    become sql_let aggregates with named variables); value parity pinned
-    by tests/test_semantics.py::test_pubdate_sql_fastpath_parity and the
-    marc_pubdate oracle row."""
     tol = int(estimate_tolerance)
 
     # --- 008 branch -------------------------------------------------------
@@ -772,9 +466,7 @@ def _pubdate_sql(
         "CASE WHEN (f8 IS NOT NULL) AND (length(f8) >= 11) THEN "
         f"coalesce({q_val}, {single_val}) END"
     )
-    f8_raw = (
-        f"get(filter({marc_sql}.controlfields, f -> f.tag = '008'), 0).value"
-    )
+    f8_raw = f"get(filter({src}.controlfields, f -> f.tag = '008'), 0).value"
     from_008 = sql_let(
         f8_raw,
         "f8",
@@ -794,21 +486,17 @@ def _pubdate_sql(
         ),
     )
 
-    # --- 264c / 260c fallback --------------------------------------------
-    def four_digits(v_sql: str) -> str:
-        pat = _rx_lit(r"(\d{4})")
+    # --- 264c / 260c fallback: first 4-digit run anywhere -----------------
+    def four_digits(spec: str) -> str:
+        first = f"get({extract_sql(src, parse_marc_spec(spec), None)}, 0)"
         return sql_let(
-            f"regexp_extract({v_sql}, {pat}, 1)",
+            f"regexp_extract({first}, {_FOUR_DIGITS}, 1)",
             "g4",
             "CASE WHEN (g4 IS NOT NULL) AND (g4 != '') "
             "THEN CAST(g4 AS bigint) END",
         )
 
-    from traject_spark.marc.extractor import _extract_sql as _ex
-
-    f264 = f"get({_ex(marc_sql, parse_marc_spec('264c'), None)}, 0)"
-    f260 = f"get({_ex(marc_sql, parse_marc_spec('260c'), None)}, 0)"
-    fallback = f"coalesce({four_digits(f264)}, {four_digits(f260)})"
+    fallback = f"coalesce({four_digits('264c')}, {four_digits('260c')})"
 
     return sql_let(
         f"coalesce({from_008}, {fallback})",
@@ -819,45 +507,51 @@ def _pubdate_sql(
     )
 
 
+_FOUR_DIGITS = _rx_lit(r"(\d{4})")
+
+
+def _default_max_year() -> int:
+    import datetime
+
+    return datetime.date.today().year + 6
+
+
+def publication_date_expr(
+    source: str = "marc",
+    estimate_tolerance: int = 15,
+    min_year: int = 500,
+    max_year: Optional[int] = None,
+) -> Column:
+    """The publication date (long, nullable) of the record column named
+    ``source`` (resolved like ``F.col``) — see :func:`_pubdate_sql`."""
+    if max_year is None:
+        max_year = _default_max_year()
+    return F.expr(
+        _pubdate_sql(sql_ident(source), estimate_tolerance, min_year, max_year)
+    )
+
+
 def marc_publication_date(
     estimate_tolerance: int = 15,
     min_year: int = 500,
     max_year: Optional[int] = None,
     as_string: bool = True,
-    _sql_fastpath: bool = True,
 ):
     """Macro form: appends the single date when found
     (marc21_semantics.rb:316-332).  ``as_string`` keeps the accumulator
     uniformly array<string> (writers serialize the digits); set False when
-    composing a typed column directly via publication_date_expr.
-
-    Build fast path (r16): the whole decision procedure renders as ONE
-    generated-SQL string (``_pubdate_sql``); ``_sql_fastpath=False``
-    forces the Column builder (parity-test hook)."""
+    composing a typed column directly via publication_date_expr."""
     if max_year is None:
-        import datetime
-
-        max_year = datetime.date.today().year + 6
+        max_year = _default_max_year()
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
+        d_sql = _pubdate_sql(
+            source_sql(ctx), estimate_tolerance, min_year, max_year
         )
-        if _sql_fastpath and src_col and _ident_safe(src_col):
-            d_sql = _pubdate_sql(
-                f"`{src_col}`", estimate_tolerance, min_year, max_year
-            )
-            v_sql = f"CAST({d_sql} AS string)" if as_string else d_sql
-            return F.concat(
-                acc,
-                F.expr(f"filter(array({v_sql}), x -> x IS NOT NULL)"),
-            )
-        d = publication_date_expr(
-            ctx.marc, estimate_tolerance, min_year, max_year
+        v_sql = f"CAST({d_sql} AS string)" if as_string else d_sql
+        return F.concat(
+            acc, F.expr(f"filter(array({v_sql}), x -> x IS NOT NULL)")
         )
-        v = d.cast("string") if as_string else d
-        return F.concat(acc, F.filter(F.array(v), lambda x: x.isNotNull()))
 
     return macro
 
@@ -885,7 +579,7 @@ def marc_lcc_to_broad_category(
     )
 
     def macro(acc: Column, ctx=None) -> Column:
-        cands = _vals_fastpath(ctx, parsed, separator=None)
+        cands = F.expr(extract_sql(source_sql(ctx), parsed, None))
         kept = F.filter(cands, lambda v: v.rlike(LCC_REGEX))
         letters = F.transform(kept, lambda v: F.substring(F.ltrim(v), 1, 1))
         mapped = F.array_distinct(tmap.translate_array_expr(letters))
@@ -901,92 +595,58 @@ def marc_lcc_to_broad_category(
 # geographic facet (marc21_semantics.rb:444-491)
 # ---------------------------------------------------------------------------
 
-_GEO_A_DEFAULT = "651a:691a"
-_GEO_Z_DEFAULT = "600:610:611:630:648:650:654:655:656:690:651:691"
+_GEO_CODES = parse_marc_spec("043a")
 
 
-def _geo_sql(marc_sql: str, probe_sql: str) -> str:
-    """Generated-SQL twin of the DEFAULT-spec marc_geo_facet parts
-    (part1+part2+part3 concatenated; the caller wraps acc + distinct).
-    One F.expr instead of ~1000 Py4J round trips; value parity with the
-    Column path is pinned by
-    tests/test_semantics.py::test_marc_geo_sql_fastpath_parity. Each
-    fragment mirrors a named Column helper:
-
-    - 043a codes via the merged tag match incl. the 880 $6 rewrite
-      (extractor.match_cond), non-null $a values only
-      (collect_subfields_expr);
-    - part1: trailing hyphens stripped, single-string map probe
-      (TranslationMap.sql_probe — gate requires eligibility), misses
-      dropped;
-    - part2: 651a/691a with the FIRST '. ' occurrence removed
-      (_ruby_sub_first form);
-    - part3: $z subdivisions per z-field; exactly two z's become
-      'z2 (z1)' + posted-up z1 (z_per_field).
-    """
-    first6 = "get(filter(f.subfields, sf -> sf.code = '6'), 0).value"
-
-    def tag_match(tags: list) -> str:
-        tl = ", ".join(f"'{t}'" for t in tags)
-        return (
-            f"(f.tag IN ({tl}) OR ((f.tag = '880') AND "
-            f"(substring({first6}, 1, 3) IN ({tl}))))"
-        )
-
-    def a_values(code: str) -> str:
-        return (
-            "coalesce(transform(filter(f.subfields, "
-            f"sf -> (sf.code = '{code}') AND (sf.value IS NOT NULL)), "
-            "sf -> sf.value), CAST(array() AS array<string>))"
-        )
-
-    codes = (
-        f"flatten(transform(filter({marc_sql}.datafields, "
-        f"f -> {tag_match(['043'])}), f -> {a_values('a')}))"
-    )
-    # lookup_expr let-binds its (computed) input; the probe references
-    # its value twice, so bind the stripped code the same way
-    part1 = (
-        f"filter(transform({codes}, c -> "
-        + sql_let(
-            f"regexp_replace(c, {_GEO_HYPHEN_LIT}, '')", "v", probe_sql
-        )
-        + "), x -> x IS NOT NULL)"
-    )
-    a_vals = (
-        f"flatten(transform(filter({marc_sql}.datafields, "
-        f"f -> {tag_match(['651', '691'])}), f -> {a_values('a')}))"
-    )
-    part2 = (
-        f"transform({a_vals}, s -> regexp_replace(s, "
-        f"{_GEO_DOT_SPLIT_LIT}, '$1$2'))"
-    )
-    z_tags = _GEO_Z_DEFAULT.split(":")
+def _geo_z_per_field(f: str, s) -> str:
+    """$z subdivisions of one field; exactly two z's become 'z2 (z1)' +
+    posted-up z1."""
     zs = (
-        "transform(filter(f.subfields, sf -> sf.code = 'z'), "
+        f"transform(filter({f}.subfields, sf -> sf.code = 'z'), "
         f"sf -> regexp_replace(sf.value, {_GEO_TRAIL_DOT_LIT}, ''))"
     )
-    z_body = (
+    return sql_let(
+        zs,
+        "zs",
         "CASE WHEN size(zs) = 2 THEN array(concat(zs[1], ' (', zs[0], "
-        "')'), zs[0]) ELSE zs END"
+        "')'), zs[0]) ELSE zs END",
     )
-    # coalesce per field: collect_matching_lines wraps each data_fn
-    # contribution so a subfields=NULL field (schema-legal in user
-    # parquet) contributes nothing instead of nulling the whole record
-    part3 = (
-        f"flatten(transform(filter({marc_sql}.datafields, "
-        f"f -> {tag_match(z_tags)}), f -> coalesce("
-        + sql_let(zs, "zs", z_body)
-        + ", CAST(array() AS array<string>))))"
-    )
-    return f"concat({part1}, {part2}, {part3})"
+
+
+def _geo_sql(src: str, a_specs, z_specs, probe_sql: Optional[str]) -> str:
+    """The geo facet's parts over the record struct ``src``, concatenated
+    (the caller wraps acc + distinct):
+
+    - part1 (only with ``probe_sql``, a TranslationMap.sql_probe over
+      ``v``): 043a codes, trailing hyphens stripped, map probe, misses
+      dropped;
+    - part2: ``a_specs`` values with the FIRST '. ' occurrence removed
+      (the reference's un-anchored sub);
+    - part3: $z subdivisions of ``z_specs`` fields (_geo_z_per_field).
+    """
+    a_vals = extract_sql(src, a_specs, None)
+    parts = [
+        f"transform({a_vals}, s -> regexp_replace(s, "
+        f"{_GEO_DOT_SPLIT_LIT}, '$1$2'))",
+        collect_matching_lines(src, z_specs, _geo_z_per_field),
+    ]
+    if probe_sql is not None:
+        codes = extract_sql(src, _GEO_CODES, None)
+        # the probe references its value twice, so bind the stripped code
+        stripped = sql_let(
+            f"regexp_replace(c, {_GEO_HYPHEN_LIT}, '')", "v", probe_sql
+        )
+        parts.insert(
+            0,
+            f"filter(transform({codes}, c -> {stripped}), x -> x IS NOT NULL)",
+        )
+    return "concat(" + ", ".join(parts) + ")"
 
 
 def marc_geo_facet(
-    geo_a_fields: str = _GEO_A_DEFAULT,
-    geo_z_fields: str = _GEO_Z_DEFAULT,
+    geo_a_fields: str = "651a:691a",
+    geo_z_fields: str = "600:610:611:630:648:650:654:655:656:690:651:691",
     translation_map=None,
-    _sql_fastpath: bool = True,
 ):
     """043a codes (trailing hyphens stripped) through the geographic map;
     651a/691a with FIRST '. ' occurrence removed (reference uses
@@ -1000,59 +660,26 @@ def marc_geo_facet(
         if isinstance(translation_map, TranslationMap)
         else TranslationMap(translation_map or "marc_geographic")
     )
-
-    def z_per_field(f: Column, s) -> Column:
-        return let(
-            F.transform(
-                F.filter(f["subfields"], lambda sf: sf["code"] == "z"),
-                lambda sf: F.regexp_replace(sf["value"], _GEO_TRAIL_DOT_RX, ""),
-            ),
-            lambda zs: F.when(
-                F.size(zs) == 2,
-                F.array(
-                    F.concat(zs[1], F.lit(" ("), zs[0], F.lit(")")), zs[0]
-                ),
-            ).otherwise(zs),
-        )
-
-    # generated-SQL twin (VERDICT r10 #8): default specs + a
-    # probe-eligible map only; the probe embeds whatever map the SAME
-    # TranslationMap load produced, so user shadowing flows through
-    probe_sql = (
-        tmap.sql_probe("v")
-        if _sql_fastpath
-        and geo_a_fields == _GEO_A_DEFAULT
-        and geo_z_fields == _GEO_Z_DEFAULT
-        else None
-    )
+    probe_sql = tmap.sql_probe("v")
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None)
-        src_col = getattr(src, "source_col", None) if src else None
-        # no lexer gate: the compiled SQL renders every regex/text
-        # literal via sql_str_lit, so it parses identically under both
-        # string-lexer modes (pinned by
-        # test_compiled_sql_texts_are_lexer_independent)
-        if probe_sql is not None and src_col and _ident_safe(src_col):
-            return F.array_distinct(
-                F.concat(acc, F.expr(_geo_sql(f"`{src_col}`", probe_sql)))
-            )
-        codes = marc_extract(ctx.marc, "043a", separator=None)
-        part1 = F.flatten(
-            F.filter(
-                F.transform(
-                    codes,
-                    lambda c: tmap.lookup_expr(
-                        F.regexp_replace(c, _GEO_HYPHEN_RX, "")
+        src = source_sql(ctx)
+        parts = F.expr(_geo_sql(src, a_parsed, z_parsed, probe_sql))
+        if probe_sql is None:
+            codes = F.expr(extract_sql(src, _GEO_CODES, None))
+            part1 = F.flatten(
+                F.filter(
+                    F.transform(
+                        codes,
+                        lambda c: tmap.lookup_expr(
+                            F.regexp_replace(c, _GEO_HYPHEN_RX, "")
+                        ),
                     ),
-                ),
-                lambda x: x.isNotNull(),
+                    lambda x: x.isNotNull(),
+                )
             )
-        )
-        a_vals = marc_extract(ctx.marc, a_parsed, separator=None)
-        part2 = F.transform(a_vals, lambda s: _ruby_sub_first(s, r"\. *"))
-        part3 = collect_matching_lines(ctx.marc, z_parsed, z_per_field)
-        return F.array_distinct(F.concat(acc, part1, part2, part3))
+            parts = F.concat(part1, parts)
+        return F.array_distinct(F.concat(acc, parts))
 
     return macro
 
@@ -1063,6 +690,8 @@ def marc_geo_facet(
 
 #: marc21_semantics.rb:517 — 'ca.' dot left unescaped as in the reference
 ERA_RANGE_REGEX = r"\A\s*.+,\s+(ca.\s+)?\d\d\d\d?(-\d\d\d\d?)?( B\.C\.)?[.,; ]*\Z"
+
+_TRAILING_DOT_LIT = _rx_lit(r"\. *\Z")
 
 
 def marc_era_facet(
@@ -1076,31 +705,29 @@ def marc_era_facet(
     ord_parsed = parse_marc_spec(ordinary_fields)
     spec_parsed = parse_marc_spec(special_fields)
 
-    def special_per_field(f: Column, s) -> Column:
-        a = F.coalesce(
-            F.get(
-                F.filter(f["subfields"], lambda sf: sf["code"] == "a"), 0
-            )["value"],
-            F.lit(""),
+    def special_per_field(f: str, s) -> str:
+        a = (
+            f"coalesce(get(filter({f}.subfields, sf -> sf.code = 'a'), 0)"
+            ".value, '')"
         )
-
-        def per_y(sf: Column) -> Column:
-            clean = F.regexp_replace(sf["value"], r"\. *\Z", "")
-            return F.when(
-                sf["value"].rlike(ERA_RANGE_REGEX),
-                F.concat(a, F.lit(separator), clean),
-            ).otherwise(clean)
-
-        ys = F.filter(f["subfields"], lambda sf: sf["code"] == "y")
-        return F.transform(ys, per_y)
+        clean = f"regexp_replace(sf.value, {_TRAILING_DOT_LIT}, '')"
+        return (
+            f"transform(filter({f}.subfields, sf -> sf.code = 'y'), sf -> "
+            f"CASE WHEN rlike(sf.value, {_rx_lit(ERA_RANGE_REGEX)}) "
+            f"THEN concat({a}, {_rx_lit(separator)}, {clean}) "
+            f"ELSE {clean} END)"
+        )
 
     def macro(acc: Column, ctx=None) -> Column:
-        ordinary = F.transform(
-            marc_extract(ctx.marc, ord_parsed, separator=" "),
-            lambda v: F.regexp_replace(v, r"\. *\Z", ""),
+        src = source_sql(ctx)
+        ordinary = (
+            f"transform({extract_sql(src, ord_parsed, ' ')}, "
+            f"v -> regexp_replace(v, {_TRAILING_DOT_LIT}, ''))"
         )
-        special = collect_matching_lines(ctx.marc, spec_parsed, special_per_field)
-        return F.array_distinct(F.concat(acc, ordinary, special))
+        special = collect_matching_lines(src, spec_parsed, special_per_field)
+        return F.array_distinct(
+            F.concat(acc, F.expr(f"concat({ordinary}, {special})"))
+        )
 
     return macro
 
@@ -1109,57 +736,14 @@ def marc_era_facet(
 # pre-coordinated LCSH (marc21_semantics.rb:540-596)
 # ---------------------------------------------------------------------------
 
-def _lcsh_sql(
-    marc_sql: str,
-    tags: list,
-    subdivision_separator: str,
-    other_separator: str,
-) -> str:
-    """Generated-SQL twin of the lcsh per-field assembly (r16 build fast
-    path) for the merged single-group shape (all-subfield specs, no
-    indicator filters). Mirrors per_field + collect_matching_lines'
-    single-group path; parity pinned by
-    tests/test_semantics.py::test_lcsh_sql_fastpath_parity and the
-    marc_lcsh oracle row."""
-    from traject_spark.marc.extractor import _SQL_EMPTY, _sql_tag_match
-
-    subd = _rx_lit(subdivision_separator)
-    other = _rx_lit(other_separator)
-    code_pat = _rx_lit(r"\A[a-z]\Z")
-    prefix = (
-        f"CASE WHEN sfi.code IN ('v', 'x', 'y', 'z') THEN {subd} "
-        f"WHEN sfi.i = 0 THEN '' ELSE {other} END"
-    )
-    step = (
-        f"CASE WHEN rlike(sfi.code, {code_pat}) "
-        "AND (sfi.value IS NOT NULL) "
-        f"THEN concat(acc_s, {prefix}, sfi.value) ELSE acc_s END"
-    )
-    indexed = (
-        "transform(f.subfields, (sf, i) -> "
-        "named_struct('code', sf.code, 'value', sf.value, 'i', i))"
-    )
-    dot_pat = _rx_lit(r"\.\Z")
-    assembled = (
-        f"regexp_replace(aggregate({indexed}, '', "
-        f"(acc_s, sfi) -> {step}), {dot_pat}, '')"
-    )
-    per_field = sql_let(
-        assembled, "asb", "array(CASE WHEN asb != '' THEN asb END)"
-    )
-    match = _sql_tag_match(tags)
-    data = (
-        f"flatten(transform(filter({marc_sql}.datafields, f -> {match}), "
-        f"f -> coalesce({per_field}, {_SQL_EMPTY})))"
-    )
-    return f"coalesce({data}, {_SQL_EMPTY})"
+_LCSH_CODE_PAT = _rx_lit(r"\A[a-z]\Z")
+_TRAILING_PERIOD_PAT = _rx_lit(r"\.\Z")
 
 
 def marc_lcsh_formatted(
     spec: str = "600:610:611:630:648:650:651:654:662",
     subdivision_separator: str = " — ",
     other_separator: str = " ",
-    _sql_fastpath: bool = True,
 ):
     """Assemble each subject field into one pre-coordinated string:
     alphabetic subfields joined; $v/$x/$y/$z prefixed by the subdivision
@@ -1168,60 +752,37 @@ def marc_lcsh_formatted(
     assemble_lcsh's each_with_index); trailing period stripped; empty ->
     nil (marc21_semantics.rb:572-596)."""
     parsed = parse_marc_spec(spec)
-    subd = ["v", "x", "y", "z"]
-
-    def per_field(f: Column, s) -> Column:
-        def step(acc_s: Column, sf_i: Column) -> Column:
-            code = sf_i["code"]
-            prefix = (
-                F.when(code.isin(subd), F.lit(subdivision_separator))
-                .when(sf_i["i"] == 0, F.lit(""))
-                .otherwise(F.lit(other_separator))
-            )
-            return F.when(
-                # value.isNotNull(): a NULL subfield VALUE (schema-legal
-                # for user parquet; impossible in ruby-marc) must skip
-                # only that subfield — concat's null propagation would
-                # otherwise null the whole assembled heading
-                code.rlike(r"\A[a-z]\Z") & sf_i["value"].isNotNull(),
-                F.concat(acc_s, prefix, sf_i["value"]),
-            ).otherwise(acc_s)
-
-        indexed = F.transform(
-            f["subfields"],
-            lambda sf, i: F.struct(
-                sf["code"].alias("code"), sf["value"].alias("value"), i.alias("i")
-            ),
-        )
-        return let(
-            F.regexp_replace(F.aggregate(indexed, F.lit(""), step), r"\.\Z", ""),
-            lambda assembled: F.array(F.when(assembled != "", assembled)),
-        )
-
-    eligible = (
-        all(_simple_data_spec(s) and s.subfields is None for s in parsed)
-        and len({s.tag for s in parsed}) == len(parsed)
+    prefix = (
+        "CASE WHEN sfi.code IN ('v', 'x', 'y', 'z') THEN "
+        f"{_rx_lit(subdivision_separator)} "
+        f"WHEN sfi.i = 0 THEN '' ELSE {_rx_lit(other_separator)} END"
+    )
+    # value IS NOT NULL: a NULL subfield VALUE (schema-legal for user
+    # parquet; impossible in ruby-marc) must skip only that subfield —
+    # concat's null propagation would otherwise null the whole heading
+    step = (
+        f"CASE WHEN rlike(sfi.code, {_LCSH_CODE_PAT}) "
+        "AND (sfi.value IS NOT NULL) "
+        f"THEN concat(acc_s, {prefix}, sfi.value) ELSE acc_s END"
     )
 
-    def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
+    def per_field(f: str, s) -> str:
+        indexed = (
+            f"transform({f}.subfields, (sf, i) -> "
+            "named_struct('code', sf.code, 'value', sf.value, 'i', i))"
         )
-        if _sql_fastpath and eligible and src_col and _ident_safe(src_col):
-            return F.concat(
-                acc,
-                F.expr(
-                    _lcsh_sql(
-                        f"`{src_col}`",
-                        [s.tag for s in parsed],
-                        subdivision_separator,
-                        other_separator,
-                    )
-                ),
-            )
+        assembled = (
+            f"regexp_replace(aggregate({indexed}, '', "
+            f"(acc_s, sfi) -> {step}), {_TRAILING_PERIOD_PAT}, '')"
+        )
+        return sql_let(
+            assembled, "asb", "array(CASE WHEN asb != '' THEN asb END)"
+        )
+
+    def macro(acc: Column, ctx=None) -> Column:
         return F.concat(
-            acc, collect_matching_lines(ctx.marc, parsed, per_field)
+            acc,
+            F.expr(collect_matching_lines(source_sql(ctx), parsed, per_field)),
         )
 
     return macro

@@ -21,8 +21,6 @@ Fidelity notes (SURVEY §4 traps):
 
 from __future__ import annotations
 
-import os
-import threading
 from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -32,24 +30,6 @@ from traject_spark.expr import let
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
 
 _EMPTY = "array<string>"
-
-#: shared worker pool for speculative parallel compilation. Module-level
-#: and lazily created: with Py4J's pinned-thread mode each Python thread
-#: owns a JVM connection, so a per-compile pool would leak connections.
-_COMPILE_POOL = None
-_COMPILE_POOL_LOCK = threading.Lock()
-
-
-def _compile_pool():
-    global _COMPILE_POOL
-    with _COMPILE_POOL_LOCK:
-        if _COMPILE_POOL is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            _COMPILE_POOL = ThreadPoolExecutor(
-                max_workers=8, thread_name_prefix="traject-compile"
-            )
-    return _COMPILE_POOL
 
 
 def _concat_contributions(exprs: list) -> Column:
@@ -163,58 +143,6 @@ class PipelineContext:
         self._pipeline._error_exprs.append(err)
 
 
-class _SpeculativeAccess(BaseException):
-    """Raised when a to_field macro touches ORDER-DEPENDENT shared state
-    during a speculative parallel compile — the signal to throw the
-    parallel attempt away and recompile sequentially. BaseException, not
-    Exception, so a macro's own ``except Exception`` rescue cannot
-    swallow the tripwire and let an order-dependent result escape."""
-
-
-class _TripwireClipboard(dict):
-    """Clipboard stand-in for speculative compiles: ANY access aborts
-    the parallel attempt (clipboard is the documented cross-step
-    channel, so reads and writes are both ordering-dependent)."""
-
-    def _trip(self, *a, **k):
-        raise _SpeculativeAccess("clipboard")
-
-    __getitem__ = __setitem__ = __delitem__ = __contains__ = _trip
-    __iter__ = __len__ = __or__ = __ror__ = __ior__ = __eq__ = _trip
-    get = setdefault = pop = popitem = update = clear = _trip
-    keys = values = items = copy = _trip
-
-
-class _SpeculativeContext(PipelineContext):
-    """PipelineContext for speculative parallel compilation of ONE
-    to_field step. Pure expression building (ctx.marc/ctx.record,
-    settings reads) proceeds; every order-dependent channel — clipboard,
-    reading/writing other fields, skip conditions, materialization,
-    error registration — raises :class:`_SpeculativeAccess`, which the
-    compiler turns into a sequential recompile. Results from a tripped
-    attempt are never used, so a partially-built expression is
-    harmless garbage."""
-
-    def __init__(self, pipeline: "Pipeline"):
-        super().__init__(pipeline)
-        self.clipboard = _TripwireClipboard()
-
-    def output(self, name: str) -> Column:
-        raise _SpeculativeAccess("output")
-
-    def add_output(self, name: str, values: Column) -> None:
-        raise _SpeculativeAccess("add_output")
-
-    def skip_when(self, cond: Column) -> None:
-        raise _SpeculativeAccess("skip_when")
-
-    def materialize(self, expr: Column, hint: str = "mat") -> Column:
-        raise _SpeculativeAccess("materialize")
-
-    def record_error(self, err: Column) -> None:
-        raise _SpeculativeAccess("record_error")
-
-
 class Pipeline:
     """Ordered to_field / each_record rule set compiling to one select."""
 
@@ -311,33 +239,29 @@ class Pipeline:
         return out
 
     def compile(self) -> tuple[list[tuple[str, Column]], Optional[Column]]:
-        """Run every step once, building the field-expression table.
+        """Run every step once, in registration order, building the
+        field-expression table.
 
         Returns ([(field_name, final Column)], skip_condition_or_None).
-
-        Expression building is driver-side Py4J traffic — the flagship
-        12-rule pipeline is ~18k round trips (~4.5s), comparable to
-        EXECUTING it over 600k rows — and it is latency-bound (socket
-        waits release the GIL). When every step is an independent
-        ``to_field``, the steps compile SPECULATIVELY in parallel on a
-        small thread pool; any step that touches an order-dependent
-        channel (clipboard, other fields, skip!, materialize/rescue)
-        trips :class:`_SpeculativeAccess` and the whole pipeline
-        recompiles sequentially, so the COMPILED EXPRESSIONS are
-        order-exact in every case. Caveat: on a tripped attempt the
-        non-tripping macros ran once speculatively and run again
-        sequentially — a macro with Python-level side effects beyond
-        the ctx (logging, module-level counters) observes two
-        invocations per compile; keep macros pure w.r.t. everything but
-        ctx, or disable with ``TRAJECT_SPARK_PARALLEL_COMPILE=0``.
-        Results merge in registration order either way.
         """
         self._field_exprs = {}
         self._skip_conds = []
         self._error_exprs = []
         self._materialized = []
-        if not self._compile_steps_parallel():
-            self._compile_steps_sequential()
+        ctx = PipelineContext(self)
+        for step in self._steps:
+            if step[0] == "to_field":
+                _, names, macros = step
+                ctx.current_step = f"to_field {names}"
+                acc = F.array().cast(_EMPTY)
+                for macro in macros:
+                    acc = macro(acc, ctx)
+                for n in names:
+                    self._add_field_expr(n, acc)
+            else:
+                _, fn = step
+                ctx.current_step = "each_record"
+                fn(ctx)
 
         fields = []
         for name, exprs in self._field_exprs.items():
@@ -353,78 +277,6 @@ class Pipeline:
         for cond in self._skip_conds:
             skip = cond if skip is None else (skip | cond)
         return skip
-
-    def _compile_steps_sequential(self) -> None:
-        ctx = PipelineContext(self)
-        for step in self._steps:
-            if step[0] == "to_field":
-                _, names, macros = step
-                ctx.current_step = f"to_field {names}"
-                acc = F.array().cast(_EMPTY)
-                for macro in macros:
-                    acc = macro(acc, ctx)
-                for n in names:
-                    self._add_field_expr(n, acc)
-            else:
-                _, fn = step
-                ctx.current_step = "each_record"
-                fn(ctx)
-        ctx.current_step = None
-
-    def _compile_steps_parallel(self) -> bool:
-        """Try the speculative parallel compile; True on success.
-
-        Eligible only when the pipeline is PURE to_field steps (an
-        each_record between rules is an ordering barrier by contract)
-        and big enough for the pool to pay for itself. Any tripwire or
-        macro error abandons the attempt — errors then re-raise from the
-        sequential pass with the reference's step ordering intact."""
-        if os.environ.get("TRAJECT_SPARK_PARALLEL_COMPILE", "1") == "0":
-            return False
-        # re-entry guard: a macro that compiles a sub-pipeline from
-        # inside a pool thread would re-submit to the same 8-worker pool
-        # and can deadlock once every worker blocks on a nested
-        # f.result() — nested compiles go sequential
-        if threading.current_thread().name.startswith("traject-compile"):
-            return False
-        if len(self._steps) < 4 or any(
-            s[0] != "to_field" for s in self._steps
-        ):
-            return False
-
-        def build(step):
-            _, names, macros = step
-            ctx = _SpeculativeContext(self)
-            ctx.current_step = f"to_field {names}"
-            acc = F.array().cast(_EMPTY)
-            for macro in macros:
-                acc = macro(acc, ctx)
-            return acc
-
-        futures = [
-            _compile_pool().submit(build, step) for step in self._steps
-        ]
-        try:
-            results = [f.result() for f in futures]
-        except (_SpeculativeAccess, Exception):
-            # tripwire or macro error: wait out the stragglers (their
-            # half-built expressions are garbage either way), then let
-            # the sequential pass produce the result — or re-raise the
-            # error — with exact step ordering. ONLY these two: a
-            # KeyboardInterrupt/SystemExit in the main thread must
-            # abort the job, not silently restart compilation
-            for f in futures:
-                f.cancel()
-                if not f.cancelled():
-                    try:
-                        f.result()
-                    except (_SpeculativeAccess, Exception):
-                        pass
-            return False
-        for step, acc in zip(self._steps, results):
-            for n in step[1]:
-                self._add_field_expr(n, acc)
-        return True
 
     # -- execution ---------------------------------------------------------
     def apply(

@@ -1,4 +1,4 @@
-"""Lexer-mode-robust SQL string literals.
+"""Lexer-mode-robust SQL string literals, and column names as SQL text.
 
 Spark has two string-literal lexer modes and they disagree about every
 escape mechanism (probed on Spark 4.1.2, tests/test_semantics.py):
@@ -23,17 +23,18 @@ pieces with ``chr(N)`` for the offenders — still a deterministic
 foldable expression, usable anywhere a literal is (Catalyst
 constant-folds it).
 
-Every generated-SQL fast path (translation-map probes, the formats/geo
-compilers) renders its embedded literals through :func:`sql_str_lit`
-so a user map with apostrophes — the languages map alone has 120 —
-behaves identically under both lexer modes.
+Every generated SQL text (the MARC extractor and semantic macros,
+translation-map probes, the formats compiler) renders its embedded
+literals through :func:`sql_str_lit` so a user map with apostrophes —
+the languages map alone has 120 — behaves identically under both lexer
+modes. The MARC renderer writes its source column with :func:`sql_ident`.
 """
 
 from __future__ import annotations
 
 import re as _re
 
-__all__ = ["sql_str_lit", "ident_safe"]
+__all__ = ["sql_str_lit", "sql_ident", "ident_safe"]
 
 
 def ident_safe(name: str) -> bool:
@@ -44,6 +45,50 @@ def ident_safe(name: str) -> bool:
     anything beyond ``[A-Za-z_][A-Za-z0-9_]*`` must take the generic
     path (callers fall back to ``F.col(name)``)."""
     return bool(_re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name))
+
+
+def sql_ident(name: str) -> str:
+    """Render a column name as SQL text that resolves exactly like
+    ``F.col(name)``: dots split the name into nested parts, a backticked
+    part is taken literally (a doubled backtick inside it is one
+    backtick), and every part is re-quoted with backticks. So
+    ``"rec.marc"`` reads field ``marc`` of struct ``rec`` and
+    ``"`a.b`"`` reads the top-level column named ``a.b``.
+
+    Follows Spark's ``UnresolvedAttribute.parseAttributeName``; a name
+    it would reject raises ``ValueError``."""
+    parts: list[str] = []
+    cur: list[str] = []
+    in_tick = False
+    i = 0
+    while i < len(name):
+        ch = name[i]
+        if in_tick:
+            if ch != "`":
+                cur.append(ch)
+            elif name[i + 1 : i + 2] == "`":
+                cur.append("`")
+                i += 1
+            else:
+                in_tick = False
+                if i + 1 < len(name) and name[i + 1] != ".":
+                    raise ValueError(f"invalid column name: {name!r}")
+        elif ch == "`":
+            if cur:
+                raise ValueError(f"invalid column name: {name!r}")
+            in_tick = True
+        elif ch == ".":
+            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
+                raise ValueError(f"invalid column name: {name!r}")
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    if in_tick:
+        raise ValueError(f"invalid column name: {name!r}")
+    parts.append("".join(cur))
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
 def sql_str_lit(s: str) -> str:
