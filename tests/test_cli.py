@@ -7,7 +7,9 @@ import os
 
 import pytest
 
-MC = "/root/reference/test/test_support/manufacturing_consent.marc"
+from tests.conftest import REFERENCE_SUPPORT
+
+MC = os.path.join(REFERENCE_SUPPORT, "manufacturing_consent.marc")
 
 
 CONFIG = """
@@ -24,6 +26,7 @@ def run_cli(spark, argv):
     return main(argv, spark=spark)
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_process_ndjson(spark, tmp_path):
     marker = str(tmp_path / "after.txt")
     conf = tmp_path / "config.py"
@@ -57,6 +60,7 @@ def test_cli_bad_setting_arg(spark):
         run_cli(spark, ["-c", "x.py", "-s", "noequals", MC])
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_marcout_json_roundtrip(spark, tmp_path):
     from traject_spark.marc.serialize import from_marc_in_json
 
@@ -81,6 +85,7 @@ def test_cli_marcout_json_roundtrip(spark, tmp_path):
     )
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_marcout_reads_config_file_settings(spark, tmp_path):
     """-x marcout must load -c config files first (command_line.rb:273-274
     initialize_indexer!), so marcout.type/output_file provided there apply."""
@@ -141,6 +146,7 @@ to_field("creator", extract_xpath("//dc:creator",
 """
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_xml_indexer_oai_sample(spark, tmp_path):
     """-i xml + nokogiri.each_record_xpath over the reference's OAI
     sample — the NokogiriIndexer CLI flavor."""
@@ -152,7 +158,7 @@ def test_cli_xml_indexer_oai_sample(spark, tmp_path):
         ["-c", str(conf), "-i", "xml",
          "-s", "nokogiri.each_record_xpath=//oai:record",
          "-o", out, "-w", "json",
-         "/root/reference/test/test_support/sample-oai-pmh.xml"],
+         os.path.join(REFERENCE_SUPPORT, "sample-oai-pmh.xml")],
     )
     assert rc == 0
     lines = []
@@ -164,6 +170,7 @@ def test_cli_xml_indexer_oai_sample(spark, tmp_path):
     assert any("title" in d for d in lines)
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_boolean_settings_and_csv_writer(spark, tmp_path):
     """-s key=false coerces to a real boolean (the string 'false' is
     truthy and would invert the setting); -w csv works without a
@@ -209,6 +216,7 @@ def test_xml_record_split_takes_outermost_match(spark, tmp_path):
     assert "identifier" in rows[0]["xml"]  # the OUTER record, whole
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_marcout_binary_is_real_iso2709(spark, tmp_path):
     """marcout binary writes a real ISO 2709 byte stream (one file),
     consumable by the repo's own reader — not base64 lines."""
@@ -223,6 +231,7 @@ def test_cli_marcout_binary_is_real_iso2709(spark, tmp_path):
     assert len(back) == 1 and back[0]["marc"]["leader"]
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_marcout_xml_is_wellformed_collection(spark, tmp_path):
     import xml.etree.ElementTree as ET
 
@@ -236,6 +245,7 @@ def test_cli_marcout_xml_is_wellformed_collection(spark, tmp_path):
     assert len(root) == 1
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_unknown_reader_and_writer_error(spark, tmp_path):
     conf = tmp_path / "c.py"
     conf.write_text("to_field('t', literal('x'))\n")
@@ -283,6 +293,7 @@ def test_cli_xml_indexer_whole_doc_default(spark, tmp_path):
     assert lines[0]["t"] == ["T1"]
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_config_helpers_shared_across_files(spark, tmp_path):
     helpers = tmp_path / "helpers.py"
     helpers.write_text("def my_macro():\n    return literal('H')\n")
@@ -416,6 +427,7 @@ def test_basic_auth_header_no_mismatched_pair():
     assert base64.b64decode(h2.split()[1]).decode() == "alice:apw"
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_stdin_matches_file_input(spark, tmp_path, monkeypatch):
     """--stdin reads records from standard input (command_line.rb:
     148-153,256) and produces byte-identical output to the same bytes
@@ -440,7 +452,7 @@ def test_cli_stdin_matches_file_input(spark, tmp_path, monkeypatch):
         'to_field("title", extract_marc("245ab", trim_punctuation=True))\n'
     )
     for src, mtype in [
-        ("/root/reference/test/test_support/test_data.utf8.json", "json"),
+        (os.path.join(REFERENCE_SUPPORT, "test_data.utf8.json"), "json"),
         (MC, "binary"),
     ]:
         via_file = str(tmp_path / f"file_{mtype}")
@@ -731,6 +743,7 @@ def test_cli_marcout_preserve_eacc_roundtrip(spark, tmp_path):
     assert open(out, "rb").read() == raw
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_cli_max_records_per_file_setting(spark, tmp_path):
     """-s output_file.max_records_per_file=N bounds records per output
     file on the CLI's file writers (the 100 TB sink-discipline knob)."""

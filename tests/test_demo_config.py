@@ -7,9 +7,13 @@ import os
 
 import pytest
 
-DATA = "/root/reference/test/test_support/test_data.utf8.mrc"
-EMPTYISH = "/root/reference/test/test_support/emptyish_record.marc"
-MC = "/root/reference/test/test_support/manufacturing_consent.marc"
+from tests.conftest import REFERENCE_SUPPORT
+
+pytestmark = pytest.mark.usefixtures("reference_tree")
+
+DATA = os.path.join(REFERENCE_SUPPORT, "test_data.utf8.mrc")
+EMPTYISH = os.path.join(REFERENCE_SUPPORT, "emptyish_record.marc")
+MC = os.path.join(REFERENCE_SUPPORT, "manufacturing_consent.marc")
 CONF = os.path.join(os.path.dirname(__file__), "demo_config.py")
 
 

@@ -310,7 +310,7 @@ def test_marc8_decoder_parity_with_marc8_to_unicode():
 # goldens against the reference's OWN MARC-8 fixtures
 # ---------------------------------------------------------------------------
 
-REF_SUPPORT = "/root/reference/test/test_support"
+from tests.conftest import REFERENCE_SUPPORT as REF_SUPPORT  # noqa: E402
 
 
 def _ref_record(name):

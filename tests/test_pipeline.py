@@ -399,6 +399,63 @@ def test_ctx_output_sees_processed_values(spark):
     assert all(r["t"] == ["A"] and r["t_len"] == ["1"] for r in rows)
 
 
+def test_ctx_output_chains_and_reads_rescued_steps(spark):
+    """ctx.output() views stack: a rule reading an earlier field's view
+    can itself be read back through ctx.output(), a NULL contribution
+    adds nothing, a field with no contributions reads [], and a view of
+    a rescued (materialized) step works inside a skip! predicate."""
+    p = (
+        Pipeline()
+        .to_field("t", extract_marc("245a:700a", allow_duplicates=True))
+        .each_record(lambda ctx: ctx.add_output(
+            "t", F.when(F.lit(False), F.array(F.lit("x")))))
+        .to_field("u", lambda acc, ctx: F.concat(
+            acc, ctx.output("t"), F.array(F.lit("extra"))))
+        .to_field("v", lambda acc, ctx: F.concat(
+            acc, F.array(F.size(ctx.output("u")).cast("string"))))
+        .to_field("none", lambda acc, ctx: F.concat(
+            acc, F.array(F.size(ctx.output("absent")).cast("string"))))
+    )
+    assert p.map_record(BOOK, spark) == {
+        "t": ["Manufacturing consent :", "Chomsky, Noam."],
+        "u": ["Manufacturing consent :", "Chomsky, Noam.", "extra"],
+        "v": ["3"],
+        "none": ["0"],
+    }
+
+    q = (
+        Pipeline()
+        .settings(mapping_rescue="skip")
+        .to_field("t", extract_marc("245a"), T.transform_udf(str.upper))
+        .to_field("u", lambda acc, ctx: F.concat(acc, ctx.output("t")),
+                  T.transform_udf(str.lower))
+    )
+    q.each_record(lambda ctx: ctx.skip_when(
+        F.exists(ctx.output("u"), lambda v: v == "nothing")))
+    good, bad = q.apply_with_quarantine(source_df(spark, ("b", BOOK)))
+    assert [r.asDict() for r in good.collect()] == [{
+        "record_id": "b",
+        "t": ["MANUFACTURING CONSENT :"],
+        "u": ["manufacturing consent :"],
+    }]
+    assert bad.count() == 0
+
+    skipped = []
+    r = (
+        Pipeline()
+        .to_field("t", extract_marc("245a"))
+        .each_record(lambda ctx: ctx.skip_when(
+            F.size(ctx.output("t")) > 0))
+    )
+    out = r.process_with(
+        source_df(spark, ("b", BOOK), ("e", EMPTY)),
+        on_skipped=lambda d: skipped.extend(
+            x["record_id"] for x in d.collect()),
+    )
+    assert [x["record_id"] for x in out.collect()] == ["e"]
+    assert skipped == ["b"]
+
+
 def test_map_record_field_named_like_id_col(spark):
     """to_field('id') with id_col='id' — the canonical traject shape —
     must not produce duplicate columns or crash map_record."""

@@ -156,6 +156,49 @@ def test_flagship_compile_build_cost_regression(spark):
     assert min(min(b) for b in attempts) < 2.0, attempts
 
 
+def test_flagship_build_py4j_command_count(spark, monkeypatch):
+    """The plan build of the 12-rule flagship config sends at most
+    400 Py4J commands. Every Column operation is a round trip (``F.col``
+    13, an empty-array cast 18) while one ``F.expr`` of any size costs 3,
+    so the rule wrappers and macro bodies render SQL; when they were
+    Column trees the same build sent 2537. Counted after one warm build,
+    over load + ``apply`` on an empty frame (``apply`` runs
+    ``compile()``), leaving out py4j's garbage-collection deletes."""
+    import os
+
+    import py4j.clientserver as cs
+
+    from traject_spark import cli
+    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
+    from traject_spark.pipeline import Pipeline
+
+    config = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "configs", "flagship.py",
+    )
+    empty = spark.createDataFrame([], MARC_SOURCE_SCHEMA)
+
+    def build():
+        p = Pipeline()
+        cli.load_config_files(p, [config])
+        return p.apply(empty)
+
+    build()
+    sent = []
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    out = build()
+    monkeypatch.undo()
+    assert len(out.columns) == 13
+    assert 0 < len(sent) <= 400, len(sent)
+
+
 def test_marc8_ingest_plan_is_narrow(spark, tmp_path):
     """The MARC-8 binary ingest (bench lane ingest_iso2709_marc8) must
     stay one narrow stage: binaryFile scan -> Arrow-batched parse, zero

@@ -41,7 +41,9 @@ from traject_spark.macros import (
 )
 from traject_spark.marc.io import read_iso2709
 
-SUPPORT = "/root/reference/test/test_support"
+from tests.conftest import REFERENCE_SUPPORT as SUPPORT
+
+pytestmark = pytest.mark.usefixtures("reference_tree")
 
 # filename -> 001 of its (single) record, to key collected rows
 FIXTURES = {

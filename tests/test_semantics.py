@@ -33,17 +33,6 @@ def run(spark, record, *macros):
     return p.map_record(record, spark).get("out")
 
 
-def run_many(spark, cases):
-    """cases: list of (record, macro) -> list of output arrays (one action)."""
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
-
-    outs = []
-    for i, (record, macro) in enumerate(cases):
-        p = Pipeline().to_field("out", macro)
-        outs.append(p.map_record(record, spark).get("out"))
-    return outs
-
-
 def test_oclcnum(spark):
     # (OCoLC) prefix, ocm prefix kept with leading zeros, non-OCLC dropped
     assert run(spark, BOOK, oclcnum()) == ["17508918", "00000123"]
@@ -204,6 +193,22 @@ def test_lcc_broad_category(spark):
     rec = marc_record(datafields=[("050", "0", "0", [("a", "Film no. 123")])])
     assert run(spark, rec, marc_lcc_to_broad_category()) == ["Unknown"]
     assert run(spark, EMPTY, marc_lcc_to_broad_category(default=None)) is None
+    # the builtin map is probed inside the SQL; a map with a __default__
+    # is not probe-eligible and translates the SQL's letters instead
+    from traject_spark.translation_map import TranslationMap
+
+    rec = marc_record(datafields=[
+        ("050", "0", "0", [("a", "QA76.73 .P98")]),
+        ("090", " ", " ", [("a", "PS3545 .A1")]),
+        ("096", " ", " ", [("a", "ZZ not lcc")]),
+    ])
+    assert run(spark, rec, marc_lcc_to_broad_category()) == [
+        "Science", "Language & Literature"
+    ]
+    tm = TranslationMap({"P": "Literature", "__default__": "Elsewhere"})
+    assert run(
+        spark, rec, marc_lcc_to_broad_category(translation_map=tm)
+    ) == ["Elsewhere", "Literature"]
 
 
 def test_geo_facet(spark):
@@ -297,15 +302,18 @@ def test_genre_array_valued_map_entries_flatten(spark):
     """A custom genre map may hold array values; the reference flattens
     them in ([results].flatten, marc_format_classifier.rb:88-92) rather
     than keeping element 0 only."""
-    from traject_spark.macros.formats import genre_expr
+    from traject_spark.macros.formats import genre_sql
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
+    from traject_spark.sqlutil import EMPTY_SQL
     from traject_spark.translation_map import TranslationMap
 
     rec = marc_record(leader="00000nam a2200000 a 4500")
     df = spark.createDataFrame([("r1", rec)], MARC_SOURCE_SCHEMA)
     lmap = TranslationMap({"am": ["Book", "Monograph"], "a": "Language"})
     out = df.select(
-        genre_expr(df["marc"], leader_map=lmap).alias("g")
+        F.expr(
+            genre_sql("coalesce(marc.leader, '')", EMPTY_SQL, leader_map=lmap)
+        ).alias("g")
     ).collect()[0]["g"]
     assert out == ["Book", "Monograph"]
 
@@ -474,13 +482,13 @@ def test_ident_safe_gates_sql_fastpath():
 
 
 def test_marc_formats_sql_fastpath_parity(spark):
-    """The generated-SQL marc_formats twin (r11: one F.expr instead of
-    ~1450 Py4J round trips) must match the Column builder value-for-value
-    over every classifier branch: genre two-byte pair vs one byte vs 007
-    fallback with NULL misses kept, manuscript, microform, online (007
-    'cr' and GMD-with-no-007c), RDA-338 print, GMD-suppressed print,
-    thesis Book replacement, Conference append, recording-suppresses-
-    Print, and the empty->default stage."""
+    """marc_formats value pins over every classifier branch: genre
+    two-byte pair vs one byte vs 007 fallback with NULL misses kept (then
+    dropped as nils at output), manuscript, microform, online (007 'cr'
+    and GMD-with-no-007c), RDA-338 print, GMD-suppressed print, thesis
+    Book replacement, Conference append, recording-suppresses-Print, and
+    the empty->default stage. The expected values were produced by the
+    earlier Column builder over the same inputs."""
     from traject_spark import Pipeline
     from traject_spark.macros import marc_formats
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
@@ -531,18 +539,22 @@ def test_marc_formats_sql_fastpath_parity(spark):
         ("null_leader", marc_record(leader=None)),
     ]
     df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    fast = Pipeline().to_field("format", marc_formats()).apply(df)
-    slow = Pipeline().to_field(
-        "format", marc_formats(_sql_fastpath=False)
-    ).apply(df)
-    fr = {r["record_id"]: r["format"] for r in fast.collect()}
-    sr = {r["record_id"]: r["format"] for r in slow.collect()}
-    assert fr == sr, {k: (fr[k], sr[k]) for k in fr if fr[k] != sr[k]}
-    # spot-pin a few absolute values so BOTH paths can't drift together
-    assert fr["book_print"] == ["Book", "Print"]
-    assert fr["thesis"] == ["Print", "Dissertation/Thesis"]
-    assert fr["recording"] == ["Musical Recording"]
-    assert fr["conf_online"] == ["Book", "Online", "Print", "Conference"]
+    rows = Pipeline().to_field("format", marc_formats()).apply(df).collect()
+    assert {r["record_id"]: r["format"] for r in rows} == {
+        "book_print": ["Book", "Print"],
+        "journal": ["Journal/Newspaper", "Print"],
+        "thesis": ["Print", "Dissertation/Thesis"],
+        "conf_online": ["Book", "Online", "Print", "Conference"],
+        "recording": ["Musical Recording"],
+        "video_gmd": ["Video/Film", "Online"],
+        "microform_007": ["Microform", "Print"],
+        "manuscript": ["Book", "Manuscript/Archive", "Print"],
+        "rda_338_volume": ["Print"],
+        "rda_338_online": ["Other"],
+        "unknown_007_nil": ["Print"],
+        "default_empty": ["Microform"],
+        "null_leader": ["Print"],
+    }
 
 
 def test_marc_geo_sql_fastpath_parity(spark):
@@ -607,18 +619,15 @@ def test_marc_geo_sql_fastpath_parity(spark):
 
 
 def test_formats_sql_map_eligibility_guards():
-    """The formats SQL fast path renders genre maps as plain literals,
-    which cannot carry __default__ (applied on every miss by the Column
-    path) or nil suppression entries (would render the string 'None') —
-    _sql_map_of_arrays refuses both, and the macro gate checks
-    eligibility before engaging (review r11)."""
+    """marc_formats renders genre maps as plain literals, which cannot
+    carry __default__ (a lookup applies it on every miss) or nil
+    suppression entries (would render the string 'None') —
+    _sql_map_of_arrays refuses both (review r11)."""
     import pytest as _pytest
 
-    from traject_spark.macros.formats import (
-        _genre_maps_sql_eligible, _sql_map_of_arrays,
-    )
+    from traject_spark.macros.formats import _sql_map_of_arrays, formats_sql
 
-    assert _genre_maps_sql_eligible()  # builtins are the simple shape
+    assert formats_sql("`marc`")  # builtins are the simple shape
     with _pytest.raises(ValueError, match="not SQL-probe eligible"):
         _sql_map_of_arrays({"aa": "Book", "xx": None})
     with _pytest.raises(ValueError, match="not SQL-probe eligible"):
@@ -632,9 +641,10 @@ def test_formats_sq_stable_under_both_lexer_modes(spark):
     """ADVICE r12: literals in the generated-SQL fast paths must parse
     identically under both string-lexer modes. Empirically (Spark 4.1.2)
     NEITHER backslash escapes NOR quote doubling survive
-    spark.sql.parser.escapedStringLiterals=true, so _sq delegates to
-    sql_str_lit (quote-char selection / chr() splicing)."""
-    from traject_spark.macros.formats import _sq
+    spark.sql.parser.escapedStringLiterals=true, so formats renders its
+    literals through sql_str_lit (quote-char selection / chr()
+    splicing)."""
+    from traject_spark.sqlutil import sql_str_lit as _sq
 
     for s in ("it's", 'say "hi"', "a\\b", "mix'ed\"and\\slash", "plain"):
         lit = _sq(s)
@@ -689,15 +699,10 @@ def test_generated_sql_paths_stable_under_escaped_lexer(spark):
     try:
         assert not default_lexer_active()
         assert run(spark, rec, marc_languages()) == base
-        assert run(spark, BOOK, marc_formats()) == run_formats_ref(spark)
+        assert run(spark, BOOK, marc_formats()) == ["Book", "Print"]
     finally:
         spark.conf.unset("spark.sql.parser.escapedStringLiterals")
     assert base == ["English", "French"]
-
-
-def run_formats_ref(spark):
-    """BOOK's formats via the forced Column path (mode-independent)."""
-    return run(spark, BOOK, marc_formats(_sql_fastpath=False))
 
 
 def test_sql_str_lit_property_both_lexer_modes(spark):
@@ -748,7 +753,8 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     the session lexer says. All embedded regexes now render via
     sql_str_lit (chr()-spliced backslashes), so the compiled SQL is
     lexer-independent; this evaluates each compiled text directly under
-    both modes against the forced Column path."""
+    both modes against value pins (the formats pins were produced by the
+    earlier Column builder)."""
     from traject_spark.macros.formats import formats_sql
     from traject_spark.macros.semantics import _geo_sql, _languages_sql
     from traject_spark.marc.spec import parse_marc_spec
@@ -803,14 +809,10 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
         finally:
             spark.conf.unset("spark.sql.parser.escapedStringLiterals")
     assert results["true"] == results["false"]
-    # and against the Column twins (mode-independent by construction)
-    col_rows = run_many(spark, [
-        (r, m) for r in recs
-        for m in (marc_formats(_sql_fastpath=False),)
-    ])
+    col_rows = [["Print", "Conference"], ["Book", "Print"], ["Book", "Print"]]
     for row, col_out in zip(results["false"], col_rows):
         assert sorted(x for x in row["formats"] if x is not None) \
-            == sorted(col_out or []), row["record_id"]
+            == sorted(col_out), row["record_id"]
     # the regex-bearing branches actually fired on r0
     r0 = results["false"][0]
     assert "Conference" in " ".join(r0["formats"] or [""]) or True

@@ -1,6 +1,8 @@
 """Transformation-macro semantics (reference: transformation.rb tests +
 trim_punctuation cases from test/indexer/macros/marc21/ *)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -798,7 +800,7 @@ def test_sql_probe_matches_lookup_semantics_random_maps(spark):
             assert row["hit"] == want, (trial, row["v"], row["hit"], want)
 
 
-def test_ruby_translation_maps_reference_fixtures():
+def test_ruby_translation_maps_reference_fixtures(reference_tree):
     """.rb translation maps load through the safe literal-subset
     evaluator (NO eval), against the reference's own fixtures
     (translation_map.rb:124-149 evals; files in the wild are literal
@@ -809,7 +811,7 @@ def test_ruby_translation_maps_reference_fixtures():
 
     from traject_spark.translation_map import RubyMapError, TranslationMap
 
-    lp = ["/root/reference/test/translation_maps"]
+    lp = [os.path.join(reference_tree, "test", "translation_maps")]
     m = TranslationMap("ruby_map", load_path=lp)
     assert m.as_dict() == {
         "key1": "value1",
@@ -830,7 +832,9 @@ def test_ruby_translation_maps_reference_fixtures():
     # a real-world 317-entry literal map
     big = TranslationMap(
         "ht/country_map",
-        load_path=["/root/reference/index_bench/translation_maps"],
+        load_path=[
+            os.path.join(reference_tree, "index_bench", "translation_maps")
+        ],
     )
     assert big.lookup("xr") == "Czech Republic"
     assert len(big.as_dict()) == 317

@@ -2,11 +2,13 @@
 harvest pagination.  Mirrors test/nokogiri_reader_test.rb and
 test/oai_pmh_nokogiri_reader_test.rb shapes (golden values inline)."""
 
+import os
 import textwrap
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import REFERENCE_SUPPORT
 from traject_spark import Pipeline
 from traject_spark.xmlrec import (
     extract_xpath,
@@ -300,10 +302,11 @@ def test_oai_pmh_restartable_harvest(spark, tmp_path):
 
 # --- reference-fixture golden: extra_xpath_hooks + namespaces -------------
 
-OAI_SAMPLE = "/root/reference/test/test_support/sample-oai-pmh.xml"
-NS_SAMPLE = "/root/reference/test/test_support/namespace-test.xml"
+OAI_SAMPLE = os.path.join(REFERENCE_SUPPORT, "sample-oai-pmh.xml")
+NS_SAMPLE = os.path.join(REFERENCE_SUPPORT, "namespace-test.xml")
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_extra_xpath_hooks_resumption_token(spark):
     """nokogiri_reader_test.rb:59-72 on the reference's own OAI sample."""
     from traject_spark.xmlrec.io import read_xml_records
@@ -324,6 +327,7 @@ def test_extra_xpath_hooks_resumption_token(spark):
         assert list(r["clipboard"]["resumptionToken"]) == [expected]
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_namespace_test_records_split(spark):
     """nokogiri_reader_test.rb outer-namespaces case: records under a
     namespaced root split out and stay parseable with their namespace."""
@@ -338,6 +342,7 @@ def test_namespace_test_records_split(spark):
         assert root.tag.endswith("}record") or root.tag == "record"
 
 
+@pytest.mark.usefixtures("reference_tree")
 def test_harvest_oai_pmh_reference_fixtures(spark):
     """Two-page harvest over the reference's own OAI-PMH fixture pages
     (oai-pmh-one-record-first.xml follows 'dummy_resumption' to
@@ -346,10 +351,10 @@ def test_harvest_oai_pmh_reference_fixtures(spark):
 
     pages = {
         None: open(
-            "/root/reference/test/test_support/oai-pmh-one-record-first.xml"
+            os.path.join(REFERENCE_SUPPORT, "oai-pmh-one-record-first.xml")
         ).read(),
         "dummy_resumption": open(
-            "/root/reference/test/test_support/oai-pmh-one-record-2.xml"
+            os.path.join(REFERENCE_SUPPORT, "oai-pmh-one-record-2.xml")
         ).read(),
     }
     calls = []

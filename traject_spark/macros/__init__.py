@@ -20,7 +20,7 @@ from traject_spark.macros.semantics import (
     marc_era_facet,
     marc_lcsh_formatted,
 )
-from traject_spark.macros.formats import marc_formats, formats_expr
+from traject_spark.macros.formats import marc_formats
 
 __all__ = [
     "literal",
@@ -42,5 +42,4 @@ __all__ = [
     "marc_era_facet",
     "marc_lcsh_formatted",
     "marc_formats",
-    "formats_expr",
 ]

@@ -12,6 +12,7 @@ from pyspark.sql.functions import pandas_udf
 
 from traject_spark.marc.extractor import extract_sql, source_sql
 from traject_spark.marc.spec import parse_marc_spec
+from traject_spark.sqlutil import EMPTY_SQL, sql_str_lit
 from traject_spark.transforms import trim_punctuation_expr
 from traject_spark.translation_map import TranslationMap
 
@@ -36,9 +37,10 @@ def extract_marc(spec: str, **options):
 
     Unknown options raise, mirroring marc21.rb:67-69.
 
-    The extraction renders as ONE SQL string (``F.expr``), one Py4J
-    round trip however large the spec; the option wrappers are small
-    Column calls on top.
+    The extraction renders as ONE SQL string (``F.expr``, 3 Py4J round
+    trips however large the spec). The options stay Column calls, since
+    they must see the whole accumulator: each costs a few dozen round
+    trips (``trim_punctuation`` ~56), paid once per rule per compile.
     """
     unknown = set(options) - EXTRACT_MARC_VALID_OPTIONS
     if unknown:
@@ -101,37 +103,33 @@ def extract_all_marc_values(
 ):
     """All subfield values of data fields with from <= tag <= to, one
     joined string per field (marc21.rb:213-238)."""
+    vals = "transform(f.subfields, sf -> sf.value)"
+    if separator is None:
+        # guard NULL subfields arrays (schema-legal in user parquet): a
+        # NULL contribution would null the whole record's flatten; the
+        # joined branch is already safe (size(NULL) > 0 is NULL -> ELSE)
+        per_field = f"coalesce({vals}, {EMPTY_SQL})"
+    else:
+        per_field = (
+            f"CASE WHEN size({vals}) > 0 THEN "
+            f"array(array_join({vals}, {sql_str_lit(separator)})) "
+            f"ELSE {EMPTY_SQL} END"
+        )
+    in_range = (
+        f"(f.tag >= {sql_str_lit(from_tag)}) AND "
+        f"(f.tag <= {sql_str_lit(to_tag)})"
+    )
 
     def macro(acc: Column, ctx=None) -> Column:
-        fields = F.filter(
-            ctx.marc["datafields"],
-            lambda f: f["tag"].between(from_tag, to_tag),
-        )
-
-        def per_field(f: Column) -> Column:
-            vals = F.transform(f["subfields"], lambda sf: sf["value"])
-            if separator is None:
-                # guard NULL subfields arrays (schema-legal in user
-                # parquet): a NULL contribution would null the whole
-                # record's flatten; the joined branch below is already
-                # safe (size(NULL) > 0 is NULL -> otherwise-empty)
-                return F.coalesce(vals, F.array().cast("array<string>"))
-            return F.when(
-                F.size(vals) > 0, F.array(F.array_join(vals, separator))
-            ).otherwise(F.array().cast("array<string>"))
-
         # coalesce the OUTER array too: marc.datafields = NULL is
         # schema-legal in user parquet, and transform(NULL) -> NULL
         # would ride concat() and wipe earlier macros' contributions to
         # the same field (every other macro guards this via the
         # extractor's coalesce)
-        return F.concat(
-            acc,
-            F.coalesce(
-                F.flatten(F.transform(fields, per_field)),
-                F.array().cast("array<string>"),
-            ),
-        )
+        return F.concat(acc, F.expr(
+            f"coalesce(flatten(transform(filter({source_sql(ctx)}.datafields, "
+            f"f -> {in_range}), f -> {per_field})), {EMPTY_SQL})"
+        ))
 
     return macro
 

@@ -19,14 +19,13 @@ from pyspark.sql import functions as F
 from traject_spark.expr import sql_let
 from traject_spark.marc.extractor import (
     EFFECTIVE_TAG_SQL,
-    EMPTY_SQL,
     collect_matching_lines,
     collect_subfields_sql,
     extract_sql,
     source_sql,
 )
 from traject_spark.marc.spec import parse_marc_spec
-from traject_spark.sqlutil import sql_ident
+from traject_spark.sqlutil import EMPTY_SQL, sql_ident
 from traject_spark.sqlutil import sql_str_lit as _rx_lit
 from traject_spark.translation_map import TranslationMap
 
@@ -114,6 +113,7 @@ def _first_field_sql(src: str, cond: str, body: str) -> str:
 
 #: Ruby OCLCPAT (marc21_semantics.rb:35-40), /x whitespace stripped, Java form
 OCLCPAT = r"\A\s*(?:\(OCoLC\)|(?:\(OCoLC\))?(?:ocm|ocn|on))(\d+)"
+_OCLCPAT_LIT = _rx_lit(OCLCPAT)
 
 
 def oclcnum(spec: str = "035a"):
@@ -122,10 +122,14 @@ def oclcnum(spec: str = "035a"):
     parsed = parse_marc_spec(spec)
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = F.expr(extract_sql(source_sql(ctx), parsed, None))
-        nums = F.transform(vals, lambda v: F.regexp_extract(v, OCLCPAT, 1))
-        kept = F.filter(nums, lambda x: x.isNotNull() & (x != ""))
-        return F.concat(acc, F.array_distinct(kept))
+        nums = (
+            f"transform({extract_sql(source_sql(ctx), parsed, None)}, "
+            f"v -> regexp_extract(v, {_OCLCPAT_LIT}, 1))"
+        )
+        return F.concat(acc, F.expr(
+            f"array_distinct(filter({nums}, "
+            "x -> (x IS NOT NULL) AND (x != '')))"
+        ))
 
     return macro
 
@@ -562,6 +566,7 @@ def marc_publication_date(
 
 #: Ruby LCC_REGEX (marc21_semantics.rb:398), Java syntax
 LCC_REGEX = r"\A *[A-Z]{1,3}[ .]*(?:(\d+)(?:\s*?\.\s*?(\d+))?).*"
+_LCC_LIT = _rx_lit(LCC_REGEX)
 
 
 def marc_lcc_to_broad_category(
@@ -577,12 +582,22 @@ def marc_lcc_to_broad_category(
         if isinstance(translation_map, TranslationMap)
         else TranslationMap(translation_map or "lcc_top_level")
     )
+    probe_sql = tmap.sql_probe("v")
 
     def macro(acc: Column, ctx=None) -> Column:
-        cands = F.expr(extract_sql(source_sql(ctx), parsed, None))
-        kept = F.filter(cands, lambda v: v.rlike(LCC_REGEX))
-        letters = F.transform(kept, lambda v: F.substring(F.ltrim(v), 1, 1))
-        mapped = F.array_distinct(tmap.translate_array_expr(letters))
+        letters = (
+            f"transform(filter({extract_sql(source_sql(ctx), parsed, None)}, "
+            f"v -> rlike(v, {_LCC_LIT})), v -> substring(ltrim(v), 1, 1))"
+        )
+        if probe_sql is None:
+            mapped = F.array_distinct(
+                tmap.translate_array_expr(F.expr(letters))
+            )
+        else:
+            mapped = F.expr(
+                f"array_distinct(filter(transform({letters}, "
+                f"v -> {probe_sql}), x -> x IS NOT NULL))"
+            )
         out = F.concat(acc, mapped)
         if default is not None:
             out = F.when(F.size(out) == 0, F.array(F.lit(default))).otherwise(out)

@@ -17,8 +17,9 @@ Semantics mirrored from the reference extractor
   880 fields; ``False`` disables the rewrite entirely
   (lib/traject/marc_extractor.rb:112-158, marc_extractor_spec.rb:51-67).
 
-Everything here renders SQL TEXT; callers wrap it in one ``F.expr``, so a
-rule builds in one Py4J round trip however large its expression tree.
+Everything here renders SQL TEXT; callers wrap it in one ``F.expr``, which
+costs 3 Py4J round trips however large the expression tree (building the
+same tree from Column calls costs one round trip per node).
 The expression is pure array algebra over the nested struct — no
 explode, no join, no shuffle. On a cluster this stays inside one
 whole-stage-codegen'd narrow stage regardless of data size.
@@ -40,9 +41,7 @@ from pyspark.sql import functions as F
 from traject_spark.expr import sql_let
 from traject_spark.marc.serialize import CONTROL_TAGS
 from traject_spark.marc.spec import ALTERNATE_SCRIPT_TAG, MarcSpec, parse_marc_spec
-from traject_spark.sqlutil import sql_ident, sql_str_lit
-
-EMPTY_SQL = "CAST(array() AS array<string>)"
+from traject_spark.sqlutil import EMPTY_SQL, sql_ident, sql_str_lit
 
 
 def source_sql(ctx) -> str:

@@ -3,11 +3,20 @@
 The reference interprets an ordered list of step objects per record on a
 thread pool (lib/traject/indexer.rb:348-355,531-619).  Here, the same DSL
 *compiles*: each ``to_field`` rule becomes one Column expression (macros
-composed over a fresh accumulator), the whole pipeline becomes ONE
+composed over the empty accumulator), the whole pipeline becomes ONE
 ``select`` + optional ``filter`` — a single narrow stage with no shuffle,
 executed by Catalyst/Tungsten with whole-stage codegen.  Thread pools,
 bounded queues and backpressure (lib/traject/thread_pool.rb) disappear into
 Spark task parallelism.
+
+Build cost: the plan is built from Python, one Py4J round trip per
+Column operation (``F.expr`` of any size costs 3, ``F.col`` 13, an empty
+array cast 18). So the per-field output post-processing below is ONE
+SQL string per field over the field's raw contributions, which one
+hidden projection (``__traject_field_<i>_<j>__``) computes after the skip
+and rescue filters; Catalyst's CollapseProject folds that projection
+into the final select (each hidden column is read once), so the
+executed plan is the same as if the expressions were inlined.
 
 Fidelity notes (SURVEY §4 traps):
 - output post-processing per add_output: drop nil values, omit empty
@@ -26,28 +35,9 @@ from typing import Callable, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let
+from traject_spark.expr import sql_let
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
-
-_EMPTY = "array<string>"
-
-
-def _concat_contributions(exprs: list) -> Column:
-    """Combine one field's per-step contributions.
-
-    Each contribution is coalesced to the empty array first: a NULL
-    contribution means "this step adds nothing" (the reference's
-    add_output just skips nil values, context.rb:117-129) — but
-    F.concat over arrays returns NULL if ANY argument is NULL, so one
-    nullable Column handed to ctx.add_output would otherwise silently
-    wipe every other step's values for the field.
-    """
-    if len(exprs) == 1:
-        # single contribution: NULL already flows to the omit-if-empty
-        # rule (field absent), same outcome as coalesce+concat
-        return exprs[0]
-    empty = F.array().cast(_EMPTY)
-    return F.concat(*[F.coalesce(e, empty) for e in exprs])
+from traject_spark.sqlutil import EMPTY_SQL, quote_ident
 
 
 class PipelineContext:
@@ -81,22 +71,25 @@ class PipelineContext:
         values arrive), so a later step keying on an earlier field's
         size or content must see the same view the writer will.
         (Lets later steps read earlier fields,
-        doc/indexing_rules.md:210-257.)"""
-        exprs = self._pipeline._field_exprs.get(name)
-        if not exprs:
-            return F.array().cast(_EMPTY)
-        # add-time invariants only: the omit-if-empty rule ([] -> NULL)
-        # is a write-time concern — a reader doing size()/exists() over
-        # an empty field must see [], not NULL
-        out = F.coalesce(
-            _concat_contributions(exprs), F.array().cast(_EMPTY)
-        )
-        s = self._pipeline.settings_dict
-        if not s.get("allow_nil_values", False):
-            out = F.filter(out, lambda x: x.isNotNull())
-        if not s.get("allow_duplicate_values", True):
-            out = F.array_distinct(out)
-        return out
+        doc/indexing_rules.md:210-257.)
+
+        The field's contributions so far become hidden columns of a new
+        materialization layer (computed before the filters, so a
+        ``skip_when`` may read the view), and the view is the pipeline's
+        post-processing SQL over them."""
+        p = self._pipeline
+        parts = p._field_exprs.get(name)
+        if not parts:
+            return F.expr(EMPTY_SQL)
+        # a contribution may read a hidden column of the open layer (a
+        # rescued step's struct): its own layer comes after
+        p._new_layer = True
+        for j, e in enumerate(parts):
+            if isinstance(e, Column):
+                parts[j] = p._hide(e, "out")
+        # whatever reads this view is materialized after its inputs
+        p._new_layer = True
+        return F.expr(p._post_sql(parts, final=False))
 
     def add_output(self, name: str, values: Column) -> None:
         """each_record-style write to any output field
@@ -125,9 +118,8 @@ class PipelineContext:
         materialized attribute instead of re-embedding the UDF call
         (Catalyst's filter pushdown / projection collapse would otherwise
         re-inline the expression into BOTH consumers)."""
-        name = f"__traject_{hint}_{len(self._pipeline._materialized)}__"
-        self._pipeline._materialized.append((name, expr))
-        return F.col(name)
+        self._pipeline._evaluate_once = True
+        return F.col(self._pipeline._hide(expr, hint))
 
     def record_error(self, err: Column) -> None:
         """Report a per-record error Column (null = ok) from a rescued
@@ -163,11 +155,20 @@ class Pipeline:
         self.settings_dict.update(settings)
         self._steps: list = []
         self._after_processing: list[Callable] = []
-        # compile state
-        self._field_exprs: dict[str, list[Column]] = {}
+        # compile state: a field contribution is a Column, or the name
+        # of the hidden column that already holds it (ctx.output)
+        self._field_exprs: dict[str, list[Union[Column, str]]] = {}
         self._skip_conds: list[Column] = []
         self._error_exprs: list[Column] = []
-        self._materialized: list[tuple[str, Column]] = []
+        # hidden columns computed before the filters, in layers: a layer
+        # may read the columns of the layers before it
+        self._materialized: list[dict[str, Column]] = []
+        self._new_layer = False
+        # a step asked for an expression evaluated once (materialize):
+        # the quarantine / on_skipped frames then share one evaluation
+        self._evaluate_once = False
+        # hidden raw field contributions, computed after the filters
+        self._hidden_fields: dict[str, Column] = {}
 
     # -- DSL ---------------------------------------------------------------
     def settings(self, **kwargs) -> "Pipeline":
@@ -223,19 +224,63 @@ class Pipeline:
     def _add_field_expr(self, name: str, expr: Column) -> None:
         self._field_exprs.setdefault(name, []).append(expr)
 
-    def _post_process(self, acc: Column) -> Column:
-        """add_output invariants (context.rb:117-129): drop nils, then
-        de-dup (when allow_duplicate_values=False), then omit-if-empty
-        (=> NULL column; writers drop nulls)."""
-        out = acc
-        if not self.settings_dict.get("allow_nil_values", False):
-            out = F.filter(out, lambda x: x.isNotNull())
-        if not self.settings_dict.get("allow_duplicate_values", True):
-            out = F.array_distinct(out)
-        if not self.settings_dict.get("allow_empty_fields", False):
-            # let-bind: the naive when(size(out)>0, out) would copy the
-            # entire accumulated field expression twice
-            out = let(out, lambda o: F.when(F.size(o) > 0, o))
+    def _hide(self, expr: Column, hint: str) -> str:
+        """Add ``expr`` to the materialized hidden columns; its name."""
+        if self._new_layer or not self._materialized:
+            self._materialized.append({})
+            self._new_layer = False
+        n = sum(len(layer) for layer in self._materialized)
+        name = f"__traject_{hint}_{n}__"
+        self._materialized[-1][name] = expr
+        return name
+
+    def _with_materialized(self, df: DataFrame) -> DataFrame:
+        """``df`` plus every materialized hidden column it lacks, layer
+        by layer. Columns ALREADY present on df are reused, not
+        recomputed — this is how apply_with_quarantine shares one
+        evaluation between the good and bad plans (it pre-materializes
+        them on a checkpointed base; names are deterministic per
+        compile)."""
+        for layer in self._materialized:
+            missing = {n: e for n, e in layer.items() if n not in df.columns}
+            if missing:
+                df = df.withColumns(missing)
+        return df
+
+    def _post_sql(self, parts: list[str], final: bool) -> str:
+        """The add_output invariants (context.rb:117-129) as SQL over a
+        field's contributions, the hidden columns named ``parts``.
+
+        Contributions are concatenated in order, each coalesced to the
+        empty array first: a NULL contribution means "this step adds
+        nothing" (the reference's add_output just skips nil values), but
+        concat over arrays returns NULL if ANY argument is NULL, so one
+        nullable contribution would otherwise wipe every other step's
+        values for the field. A single contribution's NULL flows to the
+        omit-if-empty rule instead (field absent, the same outcome).
+
+        Then: drop nils, de-dup (when allow_duplicate_values=False) and,
+        for the ``final`` output only, omit-if-empty (=> NULL column;
+        writers drop nulls). A ``ctx.output`` view reads [] for an empty
+        field: a reader doing size()/exists() must not see NULL."""
+        cols = [quote_ident(n) for n in parts]
+        if len(cols) == 1:
+            out = cols[0]
+        else:
+            out = "concat(" + ", ".join(
+                f"coalesce({c}, {EMPTY_SQL})" for c in cols
+            ) + ")"
+        if not final:
+            out = f"coalesce({out}, {EMPTY_SQL})"
+        s = self.settings_dict
+        if not s.get("allow_nil_values", False):
+            out = f"filter({out}, x -> x IS NOT NULL)"
+        if not s.get("allow_duplicate_values", True):
+            out = f"array_distinct({out})"
+        if final and not s.get("allow_empty_fields", False):
+            # let-bind: the naive CASE WHEN size(out) > 0 THEN out would
+            # copy the field expression twice
+            out = sql_let(out, "o", "CASE WHEN size(o) > 0 THEN o END")
         return out
 
     def compile(self) -> tuple[list[tuple[str, Column]], Optional[Column]]:
@@ -243,17 +288,23 @@ class Pipeline:
         field-expression table.
 
         Returns ([(field_name, final Column)], skip_condition_or_None).
+        The final Columns read the hidden field columns that ``apply``
+        projects (``self._hidden_fields``).
         """
         self._field_exprs = {}
         self._skip_conds = []
         self._error_exprs = []
         self._materialized = []
+        self._new_layer = False
+        self._evaluate_once = False
+        self._hidden_fields = {}
         ctx = PipelineContext(self)
+        empty = F.expr(EMPTY_SQL)
         for step in self._steps:
             if step[0] == "to_field":
                 _, names, macros = step
                 ctx.current_step = f"to_field {names}"
-                acc = F.array().cast(_EMPTY)
+                acc = empty
                 for macro in macros:
                     acc = macro(acc, ctx)
                 for n in names:
@@ -264,9 +315,16 @@ class Pipeline:
                 fn(ctx)
 
         fields = []
-        for name, exprs in self._field_exprs.items():
-            raw = _concat_contributions(exprs)
-            fields.append((name, self._post_process(raw).alias(name)))
+        for i, (name, parts) in enumerate(self._field_exprs.items()):
+            hidden = []
+            for j, e in enumerate(parts):
+                if isinstance(e, Column):
+                    h = f"__traject_field_{i}_{j}__"
+                    self._hidden_fields[h] = e
+                    e = h
+                hidden.append(e)
+            post = self._post_sql(hidden, final=True)
+            fields.append((name, F.expr(f"{post} AS {quote_ident(name)}")))
         return fields, self._skip_condition()
 
     def _skip_condition(self) -> Optional[Column]:
@@ -309,21 +367,7 @@ class Pipeline:
             if keep_source:
                 cols.append(F.col(self.source_col))
             cols.extend(expr for _, expr in fields)
-            out = df
-            if self._materialized:
-                # one projection computes every registered expression
-                # (rescued-UDF structs) exactly once; the hidden columns
-                # never appear in the final select below. Columns ALREADY
-                # present on df are reused, not recomputed — this is how
-                # apply_with_quarantine shares one evaluation between the
-                # good and bad plans (it pre-materializes them on a
-                # checkpointed base; names are deterministic per compile)
-                missing = {
-                    n: e for n, e in self._materialized
-                    if n not in df.columns
-                }
-                if missing:
-                    out = out.withColumns(missing)
+            out = self._with_materialized(df)
             if skip is not None:
                 # skip! => record produces nothing (indexer.rb:591-595)
                 out = out.filter(~F.coalesce(skip, F.lit(False)))
@@ -333,6 +377,10 @@ class Pipeline:
                 # (doc/settings.md:35-58 skip!-in-handler); use
                 # apply_with_quarantine to also capture the errored rows
                 out = out.filter(err.isNull())
+            if self._hidden_fields:
+                # one projection computes every field's raw contributions;
+                # the select below reads each once, so Catalyst folds it
+                out = out.withColumns(self._hidden_fields)
             return out.select(*cols)
         finally:
             self.source_col = prev_source
@@ -383,7 +431,7 @@ class Pipeline:
                 'apply_with_quarantine requires settings(mapping_rescue="skip")'
             )
         good = self.apply(df, keep=keep)
-        if self._materialized:
+        if self._evaluate_once:
             # the good and bad outputs are SEPARATE plans: without a
             # shared materialization, a nondeterministic rescued UDF
             # (e.g. a transiently-failing network call) could error in
@@ -394,9 +442,7 @@ class Pipeline:
             # executor storage holds one copy of df + the structs; on a
             # cluster with executor churn prefer a reliable checkpoint
             # dir upstream.)
-            base = df.withColumns(
-                dict(self._materialized)
-            ).localCheckpoint(eager=False)
+            base = self._with_materialized(df).localCheckpoint(eager=False)
             good = self.apply(base, keep=keep)
             df = base
         err = self._error_col()
@@ -418,11 +464,11 @@ class Pipeline:
         # hidden columns are already present and must be REUSED (a plain
         # withColumns would overwrite them with the expressions and
         # re-evaluate the UDFs, defeating the shared checkpoint)
-        missing = {
-            n: e for n, e in self._materialized if n not in df.columns
-        }
-        base = df.withColumns(missing) if missing else df
-        bad = base.select(*cols).filter(F.col("_error").isNotNull())
+        bad = (
+            self._with_materialized(df)
+            .select(*cols)
+            .filter(F.col("_error").isNotNull())
+        )
         if return_base:
             return good, bad, df
         return good, bad
@@ -464,27 +510,28 @@ class Pipeline:
             else:
                 good = self.apply(df)
                 base = df
-                if on_skipped is not None and self._materialized:
+                if on_skipped is not None and self._evaluate_once:
                     # share ONE evaluation of the nondeterministic
                     # rescued-UDF columns between the output and the
                     # skip classification (the apply_with_quarantine
                     # mechanism): recomputing them per frame could land
                     # a record in none/two of the frames when a UDF
                     # fails transiently
-                    base = df.withColumns(
-                        dict(self._materialized)
-                    ).localCheckpoint(eager=False)
+                    base = self._with_materialized(df).localCheckpoint(
+                        eager=False
+                    )
                     good = self.apply(base)
             if on_skipped is not None:
                 skip = self._skip_condition()
-                # skip predicates compiled under rescue mode may
-                # reference the materialized hidden columns — base
-                # carries them (checkpointed, so this is the SAME
-                # evaluation the good/bad frames read); the callback
-                # gets the ORIGINAL input shape back
+                # skip predicates may reference the materialized hidden
+                # columns (rescued structs, ctx.output contributions) —
+                # a checkpointed base carries them (the SAME evaluation
+                # the good/bad frames read), else they are added here;
+                # the callback gets the ORIGINAL input shape back
                 if skip is not None:
                     on_skipped(
-                        base.filter(F.coalesce(skip, F.lit(False)))
+                        self._with_materialized(base)
+                        .filter(F.coalesce(skip, F.lit(False)))
                         .select(*df.columns)
                     )
                 else:

@@ -34,7 +34,11 @@ from __future__ import annotations
 
 import re as _re
 
-__all__ = ["sql_str_lit", "sql_ident", "ident_safe"]
+__all__ = ["sql_str_lit", "sql_ident", "quote_ident", "ident_safe", "EMPTY_SQL"]
+
+#: the empty ``array<string>``: the accumulator a rule starts from and the
+#: "contributes nothing" value of every generated expression
+EMPTY_SQL = "CAST(array() AS array<string>)"
 
 
 def ident_safe(name: str) -> bool:
@@ -45,6 +49,12 @@ def ident_safe(name: str) -> bool:
     anything beyond ``[A-Za-z_][A-Za-z0-9_]*`` must take the generic
     path (callers fall back to ``F.col(name)``)."""
     return bool(_re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name))
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as ONE backtick-quoted SQL identifier: a dot stays part
+    of the name, as with ``Column.alias``."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def sql_ident(name: str) -> str:
@@ -88,7 +98,7 @@ def sql_ident(name: str) -> str:
     if in_tick:
         raise ValueError(f"invalid column name: {name!r}")
     parts.append("".join(cur))
-    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+    return ".".join(quote_ident(p) for p in parts)
 
 
 def sql_str_lit(s: str) -> str:
